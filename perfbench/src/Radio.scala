@@ -62,8 +62,9 @@ final case class Radio(name: String, shape: ObsShape, sink: String,
   /** Reads the output back with the repo's own readers: row counts
     * against the shape, and every output cell of the missing-HDU slab
     * flagged (the reference's missing-HDU semantics) while the same
-    * time bin of the other coarse channels is not. Returns the share
-    * of the slab's output cells that came back flagged.
+    * time bin of the other coarse channels is not. Any miss throws
+    * [[CheckFailed]], so a run that returns has its slab fully
+    * flagged, and the returned recall is 1.0.
     */
   def check(spark: SparkSession, in: ObsFiles): Double = {
     val out = outPath(in).toString
@@ -89,8 +90,9 @@ final case class Radio(name: String, shape: ObsShape, sink: String,
         need(r.getLong(0) == h.gcount * nCout,
           s"uvfits rows ${r.getLong(0)} != ${h.gcount * nCout}")
         need(r.getLong(1) == nTout, s"uvfits times ${r.getLong(1)} != $nTout")
+        need(r.getLong(2) > 0 && r.getLong(3) == r.getLong(2),
+          s"uvfits: ${r.getLong(3)} of ${r.getLong(2)} slab cells flagged")
         need(r.getLong(4) > 0, "uvfits: last bin flagged on every channel")
-        r.getLong(3).toDouble / r.getLong(2)
       case "ms" =>
         val c = conf(spark)
         val (rows, _, _, _) = MsContainer.audit(out, c)
@@ -113,8 +115,9 @@ final case class Radio(name: String, shape: ObsShape, sink: String,
             else if (!all) otherOpen += 1
           }
         }
+        need(slab > 0 && slabFlagged == slab,
+          s"MS: $slabFlagged of $slab slab cells flagged")
         need(otherOpen > 0, "MS: last bin flagged on every channel")
-        slabFlagged.toDouble / slab
       case _ =>
         val df = MwafReader.read(spark, out)
         val miss = shape.nScans - shape.missingTail
@@ -128,9 +131,11 @@ final case class Radio(name: String, shape: ObsShape, sink: String,
             .otherwise(0))).head()
         val want = shape.nCoarse.toLong * shape.nScans * shape.nBl
         need(r.getLong(0) == want, s"mwaf rows ${r.getLong(0)} != $want")
+        need(r.getLong(1) > 0 && r.getLong(2) == r.getLong(1),
+          s"mwaf: ${r.getLong(2)} of ${r.getLong(1)} slab rows flagged")
         need(r.getLong(3) > 0, "mwaf: missing step flagged everywhere")
-        r.getLong(2).toDouble / r.getLong(1)
     }
+    1.0
   }
 
   // ---- traced pass ------------------------------------------------------

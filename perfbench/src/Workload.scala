@@ -14,7 +14,10 @@ trait Workload {
   def name: String
   def gen(spark: SparkSession, dir: Path, seed: Long): In
   def run(spark: SparkSession, in: In): Unit
-  /** Checks the last run's output; returns the workload's recall. */
+  /** Checks the last run's output and throws [[CheckFailed]] on any
+    * miss. Returns the workload's recall@k: a ranking's measured
+    * recall, or 1.0 for an observation, whose check is all or nothing.
+    */
   def check(spark: SparkSession, in: In): Double
   /** Counts describing one generated input, summed over the timed
     * runs into the run record.
