@@ -68,15 +68,6 @@ object SparkEntry {
   private def weighted(s: SparkSession, dir: String): DataFrame =
     WeightOps.flagToWeight(flagged(s, dir))
 
-  /** CPU-bound kernel exchange width for the standalone gates (RFI
-    * detection, Van Vleck σ solve) — the session's shuffle width,
-    * like Preprocess pins for the composed chains (see
-    * RfiFlag.detectAndFlag groupParallelism / VanVleck.sigmaTable
-    * sigmaParallelism docs).
-    */
-  private def kernelPar(s: SparkSession): Int =
-    s.sessionState.conf.numShufflePartitions
-
   /** Flagship: the COMPLETE preprocessing pipeline on sf0.001 in the
     * reference's stage order (graft.ops.Preprocess): synth scan → static
     * flags → weights → Van Vleck → cable → digital gains → passband →
@@ -168,9 +159,9 @@ object SparkEntry {
 
     // PP4: the SAME chain and gate columns as q_pp_full, executed over
     // the canonical (t, chan) bucketed mirror (Sinks.
-    // writeTimeChanMirror) — the measured production layout (SCALE.md
-    // 15b: the composed chain drops to ONE corpus-scale exchange over
-    // the mirror). Identical hashes to q_pp_full by construction
+    // writeTimeChanMirror) — the production layout (SCALE.md
+    // "Layout": the composed chain plans ONE corpus-scale exchange
+    // over the mirror). Identical hashes to q_pp_full by construction
     // (BucketedMirrorSpec proves layout-invariance per stage); this
     // gate oracle-locks the canonical layout instead of leaving it
     // spec-only. The mirror write is part of the gate (the honest
@@ -349,7 +340,7 @@ object SparkEntry {
 
     "q_c5_van_vleck" -> ((s, dir) =>
       VanVleck(VisSynth.vis(s, dir), flaggedAnts = Seq(7L),
-        sampleScale = 2.0, sigmaParallelism = kernelPar(s),
+        sampleScale = 2.0,
         broadcastSigma =
           VanVleck.sigmaFitsBroadcast(graft.model.SynthDims, s))
         .select(col("t") +: col("bl") +: col("chan") +: microComps(): _*)),
@@ -362,7 +353,6 @@ object SparkEntry {
     "q_c5_pipeline" -> ((s, dir) =>
       VanVleck(VisSynth.vis(s, dir).where(col("t") < 4 && col("chan") < 2),
         flaggedAnts = Seq(7L), sampleScale = 2.0,
-        sigmaParallelism = kernelPar(s),
         broadcastSigma =
           VanVleck.sigmaFitsBroadcast(graft.model.SynthDims, s))
         .select(col("t") +: col("bl") +: col("chan") +: microComps(): _*)),
@@ -371,11 +361,8 @@ object SparkEntry {
       VanVleck.crossParity(VisSynth.vis(s, dir))),
 
     // -- RFI -----------------------------------------------------------
-    // kernelPar: the detection kernel's exchange width (see
-    // RfiFlag.detectAndFlag groupParallelism — CPU-bound per group,
-    // so AQE byte-coalescing starves it)
     "q_r1_sumthreshold" -> ((s, dir) =>
-      RfiFlag(flagged(s, dir), RfiStrategy(), kernelPar(s))),
+      RfiFlag(flagged(s, dir), RfiStrategy())),
 
     // non-default loadable strategy: yy image, mad_k 5, direction
     // weights — parsed from the same key=value surface RfiStrategy
@@ -383,7 +370,7 @@ object SparkEntry {
     "q_r1b_strategy" -> ((s, dir) =>
       RfiFlag(flagged(s, dir), RfiStrategy.parse(
         "mad_k = 5.0\npols = yy\ntime_weight = 2.0\nchan_weight = 0.5\n" +
-          "sir_eta_time = 0.3\nsir_eta_chan = 0.1"), kernelPar(s))),
+          "sir_eta_time = 0.3\nsir_eta_chan = 0.1"))),
 
     "q_r1_threshold_flags" -> ((s, dir) =>
       ThresholdFlag(VisSynth.vis(s, dir))),
@@ -413,7 +400,7 @@ object SparkEntry {
     "q_r1e_rms_flaggers" -> ((s, dir) =>
       RfiFlag(flagged(s, dir), RfiStrategy.parse(
         "ts_rms_threshold = 1.02\nch_rms_threshold = 1.01\n" +
-          "ch_rms_flag_low = true\nts_rms_final = 1.03"), kernelPar(s))),
+          "ch_rms_flag_low = true\nts_rms_final = 1.03"))),
 
     // R1f: the same RMS flaggers at their IN-LOOP call sites — the
     // placement a strategy's loop body implies (channel pass per-pol
@@ -424,7 +411,7 @@ object SparkEntry {
       RfiFlag(flagged(s, dir), RfiStrategy.parse(
         "ts_rms_threshold = 1.02\nch_rms_threshold = 1.01\n" +
           "ch_rms_flag_low = true\nts_rms_in_loop = true\n" +
-          "ch_rms_in_loop = true"), kernelPar(s))),
+          "ch_rms_in_loop = true"))),
 
     // -- sinks ---------------------------------------------------------
     "q_k1_uvfits_order" -> ((s, dir) =>

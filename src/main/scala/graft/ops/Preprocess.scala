@@ -59,14 +59,6 @@ case class Preprocess(vanVleck: Boolean = false,
                       meta: graft.model.MetaSource =
                         graft.model.SynthDims,
                       rfiStrategy: RfiStrategy = RfiStrategy(),
-                      // RFI stage shape: fused (detection group emits
-                      // the flagged rows — one corpus pass, one `bl`
-                      // exchange) vs join (detect cells, join the mask
-                      // back on (bl, t, chan) — recomputes the
-                      // upstream chain for the probe side and pays two
-                      // extra exchanges). Fused measured faster at
-                      // sf0.1 (SCALE.md round-15b); identical output.
-                      rfiFused: Boolean = true,
                       // C5 iteration-cap policy: true (default) =
                       // reference bit-parity (abandon to khat at the
                       // cap); false = engine-stable sub-nano acceptance
@@ -93,23 +85,25 @@ case class Preprocess(vanVleck: Boolean = false,
     val doCable = cable && !meta.cableApplied
     val doGeometry = geometry && !meta.geometryApplied
     val antenna = meta.antenna(spark)
-    val par = spark.sessionState.conf.numShufflePartitions
-    // ONE corpus exchange for the whole kernel-bearing chain (guide
-    // §2.4): hash(bl, par) at the top (a) spreads the Van Vleck cross
-    // kernel — with σ broadcast there is otherwise NO exchange
-    // between the scan and RFI, so a narrow scan runs the whole
-    // Newton/Simpson chain on its own width (measured: 4.7 s on 3
-    // tasks at sf0.1/c32) — (b) satisfies RFI's groupBy(bl)
-    // clustering, so its own pinned exchange is skipped, and (c)
-    // satisfies the averaging groupBy(t_out, bl, c_out) clustering
-    // (bl ⊆ keys), so the chain's output aggregate is exchange-free
-    // too. Chains without kernels (pure fused projections) keep the
-    // scan's own layout — an exchange would be pure cost there.
-    val kernelBearing = rfi || vanVleck
+    // the axes the kernel stages run on, in stage order: Van Vleck
+    // solves σ per (t, ant, chan) and joins it back per (t, chan); RFI
+    // detects per baseline
+    val axes = Seq(vanVleck -> Seq("t", "chan"), rfi -> Seq("bl"))
+      .collect { case (true, keys) => keys }
+    // spread up front so the scan's own width never runs a kernel. A
+    // source already laid out on a kernel axis (a bucketed mirror)
+    // keeps its layout. Otherwise the LAST axis: with σ broadcast the
+    // Van Vleck correction is per row and runs on any layout, so
+    // RFI's `bl`, when it runs, lets one full-row exchange serve the
+    // whole chain (spreading by (t, chan) first moved the full rows
+    // twice: q_pp3 1.7x slower at c4). Chains without kernels keep
+    // the scan's layout. A later averaging groupBy still pays its own
+    // exchange after RFI: the detection's MapGroups →
+    // SerializeFromObject re-emits `bl` as a fresh attribute, so no
+    // layout from before it carries over.
     val spreadVis =
-      if (kernelBearing && par > 0)
-        vis.repartition(par, org.apache.spark.sql.functions.col("bl"))
-      else vis
+      if (axes.isEmpty || axes.exists(Layout.satisfies(vis, _: _*))) vis
+      else Layout.clustered(vis, axes.last: _*)
     val pfb = pfbExternal.getOrElse(pfbVersion
       .map(v => Dims.pfbGainReal(spark, v, pfbOversampled,
         meta.fineChansPerCoarse))
@@ -118,10 +112,6 @@ case class Preprocess(vanVleck: Boolean = false,
     val stages: Seq[(Boolean, DataFrame => DataFrame)] = Seq(
       (vanVleck, df => VanVleck(df, meta.flaggedAnts(spark),
         sampleScale, vvReferenceCapFallback,
-        // σ-solve width: CPU-bound per cell, see sigmaTable's doc.
-        // A model-sized shuffle even over bucketed mirrors — the
-        // Newton spread is worth the trivial extra exchange there.
-        spark.sessionState.conf.numShufflePartitions,
         // broadcast σ when the CONTAINER bounds it under the
         // threshold (VanVleck.sigmaFitsBroadcast — Catalyst's own
         // estimate never fires here)
@@ -129,7 +119,7 @@ case class Preprocess(vanVleck: Boolean = false,
       (doCable, df => CableCorrection(df, antenna)),
       (digitalGains, df => DigitalGains(df, meta.digitalGain(spark))),
       (passband, df => PassbandGains(df, pfb)),
-      (rfi, df => applyRfi(df)),
+      (rfi, df => RfiFlag.detectAndFlag(df, rfiStrategy, rfiBandpass)),
       (doGeometry, df => GeometryCorrection(df, uvw)),
       (calibrate, df => Calibration(df, calsolTable(spark))))
     stages.foldLeft(spreadVis) { case (df, (enabled, stage)) =>
@@ -169,34 +159,4 @@ case class Preprocess(vanVleck: Boolean = false,
           .withColumnRenamed("cal_chan", "cc")
       case None => Dims.calsol(spark)
     }
-
-  /** RFI stage: detect per-baseline, OR the detections back into the
-    * frame's flag column (reference flag-OR mode, flags.rs:414-418).
-    *
-    * When the strategy carries an apply_bandpass file ([[rfiBandpass]]),
-    * the gains divide a detection-only COPY of the visibilities before
-    * the kernel runs — the reference hands AOFlagger an ImageSet copy
-    * and only the resulting mask propagates (flags.rs RunExisting) —
-    * so the frame this method RETURNS carries the original,
-    * un-bandpassed data with only the flag column updated.
-    */
-  private def applyRfi(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    // groupParallelism = 0: the chain's top-level hash(bl, par)
-    // repartition (apply) already satisfies the detection grouping,
-    // so pinning here would only add a second bl exchange
-    if (rfiFused)
-      return RfiFlag.detectAndFlag(df, rfiStrategy, rfiBandpass)
-    val detectInput = rfiBandpass match {
-      case Some(pb) =>
-        (0 until 8).foldLeft(df.join(broadcast(pb), Seq("fc"))) {
-          (d, k) => d.withColumn(s"v$k", col(s"v$k") / col("pfb_gain"))
-        }.drop("pfb_gain")
-      case None => df
-    }
-    val rfi = RfiFlag(detectInput, rfiStrategy)
-    df.join(rfi, Seq("bl", "t", "chan"), "left")
-      .withColumn("flag", col("flag") || coalesce(col("rfi"), lit(false)))
-      .drop("rfi")
-  }
 }

@@ -239,19 +239,8 @@ object RfiFlag {
   def apply(visFlagged: DataFrame, madK: Double = 6.0): DataFrame =
     run(visFlagged, RfiStrategy(madK = madK))
 
-  /** Strategy variant with the `bl` exchange width pinned — see
-    * [[detectAndFlag]]'s `groupParallelism` doc. Kept separate from
-    * the 2-arg apply so the bucketed-source call sites (which must
-    * plan ZERO exchanges, BucketedMirrorSpec) keep the planner-default
-    * path.
-    */
-  def apply(visFlagged: DataFrame, strategy: RfiStrategy,
-            groupParallelism: Int): DataFrame =
-    run(visFlagged, strategy, groupParallelism)
-
   private def run(visFlagged: DataFrame,
-                  strategy: RfiStrategy,
-                  groupParallelism: Int = 0): DataFrame = {
+                  strategy: RfiStrategy): DataFrame = {
     val spark = visFlagged.sparkSession
     import spark.implicits._
     // one amplitude per selected polarisation image, in strategy order
@@ -259,21 +248,19 @@ object RfiFlag {
       val (ri, ii) = RfiStrategy.PolComps(p)
       sqrt(col(s"v$ri") * col(s"v$ri") + col(s"v$ii") * col(s"v$ii"))
     }
-    val cells: Dataset[RfiCell] = visFlagged.select(
+    // the detection kernel is CPU-bound per baseline GROUP: ask for
+    // the `bl` axis (Layout.clustered — free over a bl-bucketed
+    // source, else pinned to shuffle width)
+    val cells: Dataset[RfiCell] = Layout.clustered(visFlagged.select(
       col("bl"), col("t"), col("chan"),
       array(ampCols: _*).as("amps"),
-      col("flag")).as[RfiCell]
+      col("flag")), "bl").as[RfiCell]
 
     // COLUMN-keyed grouping (groupBy(col).as[K, T]), not the lambda
     // groupByKey(_.bl): the lambda key is opaque to Catalyst, so it
-    // ALWAYS plans an AppendColumns + hash Exchange — over a source
-    // bucketed by bl, the column key lets the planner elide the
-    // shuffle entirely (the 100 TB layout; measured in SCALE.md)
-    val clustered =
-      if (groupParallelism > 0)
-        cells.repartition(groupParallelism, col("bl"))
-      else cells
-    clustered.groupBy(col("bl")).as[Long, RfiCell]
+    // ALWAYS plans an AppendColumns + hash Exchange, and the layout
+    // above would not satisfy it
+    cells.groupBy(col("bl")).as[Long, RfiCell]
       .flatMapGroups { (bl, it) =>
         detectGroup(bl, it.toArray, strategy)
       }.toDF()
@@ -281,14 +268,12 @@ object RfiFlag {
 
   /** FUSED detect-and-flag: run the per-baseline detection and emit
     * the INPUT ROWS with the detections OR'd into `flag` — one pass,
-    * no mask join. The join shape (`RfiFlag` + join back on
-    * (bl, t, chan)) reads the upstream frame TWICE (once to feed
-    * detection, once as the probe side — the whole correction chain
-    * recomputes) and pays two (bl, t, chan) exchanges; this shape
-    * reads it once and pays one `bl` exchange (zero over a
-    * bl-bucketed source). The price is the full row crossing the
-    * object boundary instead of just the detection cells — measured
-    * faster for the composed preprocess chain (SCALE.md round-15b).
+    * no mask join. A join shape (`RfiFlag` + join back on
+    * (bl, t, chan)) would read the upstream frame twice and pay two
+    * (bl, t, chan) exchanges; this shape reads it once and pays at
+    * most one `bl` exchange (none over a bl-bucketed source, SCALE.md
+    * "Layout"). The price is the full row crossing the object
+    * boundary instead of just the detection cells.
     *
     * `rfiBandpass`: optional (fc, pfb_gain) table dividing the
     * DETECTION amplitudes only (a Lua strategy's apply_bandpass; the
@@ -297,20 +282,8 @@ object RfiFlag {
     * `amps` the kernel sees.
     */
   def detectAndFlag(visFlagged: DataFrame, strategy: RfiStrategy,
-                    rfiBandpass: Option[DataFrame] = None,
-                    // > 0 pins the `bl` exchange to that many
-                    // partitions (repartition-by-col, exempt from AQE
-                    // coalescing). The detection kernel is CPU-bound
-                    // per GROUP, not per byte: AQE's byte-sized
-                    // coalescing legitimately folds the model-sized
-                    // shuffle to 2-3 partitions and then the whole
-                    // Newton/SumThreshold grid work convoys on 3
-                    // cores (measured 0.73 s of pp3's 3.5 s at c32).
-                    // 0 = leave to the planner — REQUIRED for
-                    // bl-bucketed sources, whose scan clustering
-                    // already satisfies the grouping with ZERO
-                    // exchanges (BucketedMirrorSpec).
-                    groupParallelism: Int = 0): DataFrame = {
+                    rfiBandpass: Option[DataFrame] = None)
+      : DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     val ampCols = strategy.pols.map { p =>
       val (ri, ii) = RfiStrategy.PolComps(p)
@@ -339,11 +312,9 @@ object RfiFlag {
     val ampsI = inSchema.fieldIndex("amps")
     require(flagI < n && blI < n && tI < n && chanI < n,
       "detectAndFlag: key/flag columns must precede the appended amps")
-    val clustered =
-      if (groupParallelism > 0)
-        withAmps.repartition(groupParallelism, col("bl"))
-      else withAmps
-    clustered.groupBy(col("bl"))
+    // same `bl` axis as [[run]]; inside Preprocess the chain's
+    // up-front spread usually provides it already
+    Layout.clustered(withAmps, "bl").groupBy(col("bl"))
       .as[Long, Row](Encoders.scalaLong, Encoders.row(inSchema))
       .flatMapGroups { (bl: Long, it: Iterator[Row]) =>
         val rows = it.toArray

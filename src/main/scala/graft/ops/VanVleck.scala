@@ -58,18 +58,7 @@ object VanVleck {
     * sqrt(component / sampleScale)).
     */
   def sigmaTable(vis: DataFrame, flaggedAnts: Seq[Long],
-                 sampleScale: Double,
-                 // > 0 re-spreads the aggregate's output before the
-                 // Newton kernel projection: the σ solve is CPU-bound
-                 // per CELL, so AQE's byte-sized coalescing of the
-                 // model-sized agg exchange runs ~100k Newton solves
-                 // on 2-3 tasks (and the projection sits under BOTH
-                 // s1/s2 broadcast builds — JobProbe: 2 × 3-task jobs
-                 // carrying ~1.1 s of pp3 at c32). The re-spread is a
-                 // model-sized shuffle (T×A×C rows), trivial bytes.
-                 // 0 = planner default, keeps the bucketed-source
-                 // plans exchange-free (BucketedMirrorSpec).
-                 sigmaParallelism: Int = 0): DataFrame = {
+                 sampleScale: Double): DataFrame = {
     val autos = vis
       .where(col("ant1") === col("ant2"))
       .where(!col("ant1").isin(flaggedAnts: _*))
@@ -78,24 +67,20 @@ object VanVleck {
     val agg = autos
       .groupBy(col("t"), col("ant1").as("ant"), col("chan"))
       .agg(max(abs(col("v0"))).as("pxx"), max(abs(col("v6"))).as("pyy"))
-    // spread keys (t, chan), NOT the agg's own (t, ant, chan): a
-    // repartition matching the aggregate's grouping exactly is
-    // removed as redundant by the optimizer (the agg's exchange
-    // already provides it) and the kernel projection then runs on
-    // the AQE-coalesced width
-    val spread =
-      if (sigmaParallelism > 0)
-        agg.repartition(sigmaParallelism, col("t"), col("chan"))
-      else agg
+    // the σ solve is CPU-bound per CELL: ask for the (t, chan) axis so
+    // the Newton projection runs at shuffle width, not on the 2-3
+    // tasks AQE coalesces the model-sized aggregate exchange to. Over
+    // a source already clustered on (t, chan) the aggregate inherits
+    // that layout and this adds nothing. (t, chan), not the agg's own
+    // (t, ant, chan): a repartition matching the grouping exactly is
+    // removed as redundant and the projection falls back to the
+    // coalesced width.
+    val spread = Layout.clustered(agg, "t", "chan")
     spread.select(col("t"), col("ant"), col("chan"),
         vvAuto(sqrt(col("pxx") / sampleScale)).as("sigma_x"),
         vvAuto(sqrt(col("pyy") / sampleScale)).as("sigma_y"))
   }
 
-  /** Apply the full correction. Rows whose antennas lack σ (flagged) pass
-    * through unchanged, as in the reference's `_ => {}` arm
-    * (van_vleck.rs:298-300).
-    */
   /** Whether the σ table PROVABLY fits a broadcast, decided from
     * container metadata alone (guide §3.1 "use an explicit hint when
     * you know a side is small"): σ has at most nScans·nAnts·nChans
@@ -103,25 +88,39 @@ object VanVleck {
     * from Catalyst's estimate, which derives σ's size from the
     * corpus scan and therefore NEVER auto-broadcasts it (measured:
     * both σ joins ran as SortMergeJoin with full-corpus
-    * (t, ant, chan) exchanges even under AQE). ~48 B/row = 3 longs +
-    * 2 doubles + row overhead. A real 240-scan 128-tile 3072-chan
-    * obs is ~94M cells → stays on the co-located SMJ path.
+    * (t, ant, chan) exchanges even under AQE). A real 240-scan
+    * 128-tile 3072-chan obs is ~94M cells → stays on the co-located
+    * SMJ path.
     */
   def sigmaFitsBroadcast(meta: graft.model.MetaSource,
                          spark: SparkSession): Boolean = {
     val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
     thr > 0 &&
-      meta.nScans.toLong * meta.nAnts * meta.nChans * 48L <= thr
+      meta.nScans.toLong * meta.nAnts * meta.nChans *
+        SigmaBroadcastRowBytes <= thr
   }
 
+  /** Conservative bytes per σ row in the broadcast hashed relation
+    * (an UnsafeHashedRelation: the (t, ant, chan) key is three longs,
+    * so it never takes the long-key map):
+    *   - value row, 5 fields + null word:             48 B
+    *   - key row, 3 longs + null word:                32 B
+    *   - record header (lengths + next pointer):      16 B
+    *   - slot array, 2 longs per slot, at most 4 slots
+    *     per row (load factor 0.5, power-of-2 size):  64 B
+    */
+  private val SigmaBroadcastRowBytes = 160L
+
+  /** Apply the full correction. Rows whose antennas lack σ (flagged)
+    * pass through unchanged, as in the reference's `_ => {}` arm
+    * (van_vleck.rs:298-300).
+    */
   def apply(vis: DataFrame, flaggedAnts: Seq[Long],
             sampleScale: Double,
             referenceCapFallback: Boolean = true,
-            sigmaParallelism: Int = 0,
             broadcastSigma: Boolean = false): DataFrame = {
     val vvCross = vvCrossFn(referenceCapFallback)
-    val sigma = sigmaTable(vis, flaggedAnts, sampleScale,
-      sigmaParallelism)
+    val sigma = sigmaTable(vis, flaggedAnts, sampleScale)
     val hint: DataFrame => DataFrame =
       if (broadcastSigma) broadcast else identity
     val s1 = hint(sigma.select(col("t"), col("ant").as("ant1"),

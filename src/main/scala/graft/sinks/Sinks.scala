@@ -246,13 +246,13 @@ object Sinks {
       .format("parquet").mode("overwrite").saveAsTable(table)
   }
 
-  /** Write the `(t, chan)` bucketed mirror — the measured CANONICAL
-    * layout for the composed preprocess chain (SCALE.md round-15
-    * table: removes BOTH of Van Vleck's exchanges because equal
-    * (t, ant, chan) implies equal (t, chan), so the bucket clustering
-    * satisfies the σ-aggregate's distribution; with the fused RFI
-    * stage the whole chain drops to ONE corpus-scale exchange, ~1.7×
-    * faster at sf0.1 than the plain layout). Use
+  /** Write the `(t, chan)` bucketed mirror — the CANONICAL layout
+    * for the composed preprocess chain (SCALE.md "Layout": removes
+    * ALL of Van Vleck's exchanges because equal (t, ant, chan)
+    * implies equal (t, chan), so the bucket clustering satisfies the
+    * σ aggregate, the σ joins and the chain's up-front spread; with
+    * the fused RFI stage the whole chain plans ONE corpus-scale
+    * exchange, RFI's `bl`). Use
     * [[writeBucketedMirror]] (`bl`) instead for RFI-/occupancy-
     * dominated jobs — the two keys are mutually exclusive layouts,
     * which is why both writers exist.

@@ -1,15 +1,25 @@
 package graft
 
+import graft.model.{Dims, MetaSource, SynthDims}
+import graft.ops.{Averaging, FlagOps, Preprocess, RfiFlag, VanVleck, WeightOps}
 import graft.sinks.Sinks
 import graft.synth.VisSynth
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SCALE.md evidence: a mirror bucketed by `bl` lets Spark elide the
-  * shuffle for baseline-keyed aggregation (the RFI/occupancy axis).
+/** The layout contract (SCALE.md "Layout"): each kernel operator asks
+  * for its axis through `Layout.clustered`, so a source already laid
+  * out on that axis — a mirror bucketed by `bl` (RFI) or by
+  * `(t, chan)` (Van Vleck) — saves the exchange, while a plain source
+  * pays for each axis it lacks. Counts are shuffle exchanges in the
+  * FINAL adaptive plan of the executed frame.
   */
-class BucketedMirrorSpec extends AnyFunSuite {
+class BucketedMirrorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,101 +28,108 @@ class BucketedMirrorSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("groupBy(bl) over the bucketed mirror plans no shuffle") {
-    val vis = VisSynth.vis(spark, "/root/testdata/sf0.001")
-    Sinks.writeBucketedMirror(vis, "vis_bucketed_spec", buckets = 8)
-    val agg = spark.table("vis_bucketed_spec")
-      .groupBy("bl").agg(count(lit(1)).as("n"), sum("v0").as("s"))
-    val plan = agg.queryExecution.executedPlan.toString()
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"unexpected shuffle in:\n$plan")
-    assert(agg.count() > 0)
-    // unbucketed baseline: the same aggregate DOES shuffle
-    val plain = vis.groupBy("bl").agg(count(lit(1)).as("n"))
-    assert(plain.queryExecution.executedPlan.toString()
-      .contains("Exchange hashpartitioning"))
-    spark.sql("DROP TABLE IF EXISTS vis_bucketed_spec")
+  /** Each shuffle once: query stages are walked into, and a
+    * ReusedExchange (a leaf) is a read of a shuffle already counted.
+    * The adaptive plan's "Initial Plan" section is not part of the
+    * final plan.
+    */
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def shuffles(df: DataFrame): Int =
+      collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e
+      }.size
   }
 
-  test("RfiFlag over the bl-bucketed mirror plans ZERO shuffles and " +
-    "detects identically to the plain run") {
-    import graft.model.Dims
-    import graft.ops.{FlagOps, RfiFlag, WeightOps}
-    val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
-      VisSynth.vis(spark, "/root/testdata/sf0.001"),
-      Dims.timestep(spark), Dims.chan(spark), Dims.baseline(spark)))
-    Sinks.writeBucketedMirror(weighted, "vis_rfi_bucketed", buckets = 8)
-    val overBucketed = RfiFlag(spark.table("vis_rfi_bucketed"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .toSet
-    val got = rows(overBucketed)
-    // the operator-level claim (not just a column aggregate): the
-    // column-keyed flatMapGroups grouping is satisfied by the bucket
-    // clustering, so the WHOLE detection plan runs shuffle-free
-    val plan = overBucketed.queryExecution.executedPlan.toString()
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"unexpected shuffle in RfiFlag over bucketed mirror:\n" +
-        plan.take(2000))
-    assert(got == rows(RfiFlag(weighted)),
-      "bucketed-layout detection diverged from the plain run")
-    spark.sql("DROP TABLE IF EXISTS vis_rfi_bucketed")
-  }
+  /** Doubles in integer micro-units (the gates' representation), so
+    * averaging sums compare across layouts whatever their order.
+    */
+  private def rows(df: DataFrame): DataFrame = df.select(
+    df.schema.fields.toSeq.map { f =>
+      if (f.dataType == DoubleType)
+        floor(col(f.name) * 1e6 + 0.5).as(f.name)
+      else col(f.name)
+    }: _*)
 
-  test("Van Vleck over the (t, chan) mirror plans fewer exchanges " +
-    "and corrects identically to the plain run") {
-    import graft.model.Dims
-    import graft.ops.{FlagOps, VanVleck, WeightOps}
-    val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
-      VisSynth.vis(spark, "/root/testdata/sf0.001"),
-      Dims.timestep(spark), Dims.chan(spark), Dims.baseline(spark)))
+  private def pp(vv: Boolean)(df: DataFrame) =
+    Preprocess(vanVleck = vv, rfi = true)(spark, df)
+
+  // test name, operator, expected final-plan shuffles over (plain,
+  // bl mirror, (t, chan) mirror)
+  private val table: Seq[(String, DataFrame => DataFrame, Seq[Int])] =
+    Seq(
+      ("groupBy(bl) over the bucketed mirror plans no shuffle",
+        df => df.groupBy("bl")
+          .agg(count(lit(1)).as("n"), sum("v0").as("s")), Seq(1, 0, 1)),
+      ("RfiFlag over the bl-bucketed mirror plans ZERO shuffles and " +
+        "detects identically to the plain run",
+        df => RfiFlag(df), Seq(1, 0, 1)),
+      ("Van Vleck over the (t, chan) mirror plans fewer exchanges " +
+        "and corrects identically to the plain run",
+        df => VanVleck(df, Seq(7L), 2.0), Seq(3, 2, 0)),
+      ("per-layout final-plan shuffles of Preprocess(vv, rfi)",
+        pp(vv = true), Seq(4, 2, 1)),
+      ("per-layout final-plan shuffles of Preprocess(rfi)",
+        pp(vv = false), Seq(1, 0, 1)),
+      ("per-layout final-plan shuffles of Preprocess(rfi) + avg 2x2",
+        df => Averaging.avgTimeFreq(pp(vv = false)(df), 2, 2),
+        Seq(2, 1, 2)),
+      ("per-layout final-plan shuffles of Preprocess(vv, rfi) + avg 2x2",
+        df => Averaging.avgTimeFreq(pp(vv = true)(df), 2, 2),
+        Seq(5, 3, 2)))
+
+  private lazy val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
+    VisSynth.vis(spark, "/root/testdata/sf0.001"),
+    Dims.timestep(spark), Dims.chan(spark), Dims.baseline(spark)))
+
+  // the two mirrors are written once, on first use, for every row
+  private lazy val layouts: Seq[(String, () => DataFrame)] = {
+    Sinks.writeBucketedMirror(weighted, "vis_bl_spec", buckets = 8)
     Sinks.writeTimeChanMirror(weighted, "vis_tchan_spec", buckets = 8)
-    def nEx(df: org.apache.spark.sql.DataFrame) =
-      "Exchange hashpartitioning".r
-        .findAllIn(df.queryExecution.executedPlan.toString()).length
-    val overMirror = VanVleck(spark.table("vis_tchan_spec"),
-      Seq(7L), 2.0)
-    val plain = VanVleck(weighted, Seq(7L), 2.0)
-    // equal (t, ant, chan) implies equal (t, chan): the bucket
-    // clustering satisfies the sigma aggregate's distribution, so
-    // both of C5's fact-side exchanges disappear
-    assert(nEx(overMirror) < nEx(plain),
-      s"(t,chan) mirror did not elide exchanges: " +
-        s"${nEx(overMirror)} vs plain ${nEx(plain)}")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("t"), col("bl"), col("chan"),
-        round(col("v0"), 6), round(col("v1"), 6))
-      .collect().map(_.toSeq).toSet
-    assert(key(overMirror) == key(plain),
-      "(t,chan)-layout correction diverged from the plain run")
-    spark.sql("DROP TABLE IF EXISTS vis_tchan_spec")
+    Seq("plain" -> (() => weighted),
+      "bl mirror" -> (() => spark.table("vis_bl_spec")),
+      "(t, chan) mirror" -> (() => spark.table("vis_tchan_spec")))
   }
 
-  test("COMPOSED preprocess chain over the (t, chan) mirror: at most " +
-    "3 exchanges in the executed plan, identical gate columns to the " +
-    "plain layout (the q_pp4 canonical-layout claim)") {
-    import graft.model.Dims
-    import graft.ops.{FlagOps, Preprocess, WeightOps}
-    val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
-      VisSynth.vis(spark, "/root/testdata/sf0.001"),
-      Dims.timestep(spark), Dims.chan(spark), Dims.baseline(spark)))
-    Sinks.writeTimeChanMirror(weighted, "vis_pp4_spec", buckets = 8)
-    def gate(df: org.apache.spark.sql.DataFrame) =
-      Preprocess(vanVleck = true, rfi = true)(spark, df)
-        .select(col("t"), col("bl"), col("chan"),
-          floor(col("v0") * 1e6 + 0.5), floor(col("v1") * 1e6 + 0.5),
-          col("flag"),
-          floor(col("weight") * 112.0 + 0.5).cast("long"))
-    val overMirror = gate(spark.table("vis_pp4_spec"))
-    val rows = overMirror.collect().map(_.toSeq).toSet // executes
-    val nEx = "Exchange hashpartitioning".r
-      .findAllIn(overMirror.queryExecution.executedPlan.toString())
-      .length
-    assert(nEx <= 3, s"composed chain over the (t,chan) mirror " +
-      s"planned $nEx exchanges (SCALE.md 15b budget is <= 3)")
-    assert(rows == gate(weighted).collect().map(_.toSeq).toSet,
-      "mirror-layout chain diverged from the plain layout")
-    spark.sql("DROP TABLE IF EXISTS vis_pp4_spec")
+  override def afterAll(): Unit = {
+    try {
+      spark.sql("DROP TABLE IF EXISTS vis_bl_spec")
+      spark.sql("DROP TABLE IF EXISTS vis_tchan_spec")
+    } finally super.afterAll()
+  }
+
+  for ((name, op, want) <- table) test(name) {
+    val runs = layouts.map { case (_, src) =>
+      val df = rows(op(src()))
+      val out = df.collect().map(_.toSeq).toSet // executes
+      (Plans.shuffles(df), out)
+    }
+    runs.zip(layouts).tail.foreach { case ((_, out), (layout, _)) =>
+      assert(out == runs.head._2,
+        s"$name: the $layout diverged from the plain layout")
+    }
+    val got = runs.map(_._1)
+    assert(got == want, s"shuffles (plain, bl mirror, (t, chan) " +
+      s"mirror): want ${want.mkString(" ")}, got ${got.mkString(" ")}")
+  }
+
+  test("σ broadcast bound counts the hashed relation, not 48 B/row") {
+    val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
+    // the most 128-tile, 128-channel scans whose σ rows fit the
+    // threshold at 48 B/row: the hashed relation is larger than that
+    val scans = (thr / 48 / (128 * 128)).toInt
+    assert(scans.toLong * 128 * 128 * 48 <= thr)
+    val nearThreshold = new MetaSource {
+      def antenna(s: SparkSession) = SynthDims.antenna(s)
+      def timestep(s: SparkSession) = SynthDims.timestep(s)
+      def chan(s: SparkSession) = SynthDims.chan(s)
+      def baseline(s: SparkSession) = SynthDims.baseline(s)
+      def digitalGain(s: SparkSession) = SynthDims.digitalGain(s)
+      def flaggedAnts(s: SparkSession) = SynthDims.flaggedAnts(s)
+      override def nScans: Int = scans
+      override def nAnts: Int = 128
+      override def nChans: Int = 128
+    }
+    assert(!VanVleck.sigmaFitsBroadcast(nearThreshold, spark))
+    assert(VanVleck.sigmaFitsBroadcast(SynthDims, spark))
   }
 }
