@@ -758,12 +758,18 @@ object SparkEntry {
     // x − centroid(cell) on the exact integer micro grid; oracle
     // re-derives snapped centroids, residuals and the residual Lloyd
     // rounds independently
-    "q_sim13_ann_ivfpq_residual" -> ((s, dir) =>
-      Similarity.ivfPqResidualTopK(emb(s, dir), fixtureScale = true)),
+    "q_sim13_ann_ivfpq_residual" -> ((s, dir) => {
+      val e = emb(s, dir)
+      Similarity.ivfPqServe(e, Similarity.IvfPqModel.residual(e),
+        nProbe = 2, nQueries = 8, k = 5)
+    }),
     // the serving tail: trained ADC top-R, exact-cosine re-rank to
     // top-k over candidate-sized frames only
-    "q_sim14_ann_ivfpq_rerank" -> ((s, dir) =>
-      Similarity.ivfPqRerankTopK(emb(s, dir), fixtureScale = true)),
+    "q_sim14_ann_ivfpq_rerank" -> ((s, dir) => {
+      val e = emb(s, dir)
+      Similarity.ivfPqServe(e, Similarity.IvfPqModel.train(e),
+        nProbe = 8, nQueries = 8, k = 5, r = 160)
+    }),
     // the COMPLETE canonical serving stack (FAISS IVFPQ+refine):
     // residual index -> per-cell ADC top-R -> exact re-rank
     "q_sim15_ann_residual_rerank" -> ((s, dir) =>

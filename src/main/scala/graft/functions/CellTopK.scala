@@ -186,31 +186,37 @@ object CellTopK {
     s / 2.0
   }
 
-  /** Ranked top-`nTop` cells of a DOUBLE vector column against literal
-    * double centroids, micro-unit score scale (divide by `divisor`
-    * before rounding): the [[graft.llm.Similarity]] `cellSortD` /
-    * [[graft.llm.Clustering]] `cellSort` shape. `offset` selects a
-    * subvector starting at that 0-based element (the PQ subspace
-    * slice, without materialising the slice).
+  /** Ranked top-`nTop` cells of a vector column against literal
+    * centroids held as doubles: `floatInput` reads an `array<float>`
+    * column (float codewords widen exactly, so a widened float model
+    * ranks bit-identically to the float form), `divisor` rescales the
+    * score before rounding (1.0 is bitwise identity). `offset`
+    * selects a subvector starting at that 0-based element (the PQ
+    * subspace slice, without materialising the slice).
+    */
+  def rank(vec: Column, cents: Array[(Int, Array[Double])],
+           divisor: Double, floatInput: Boolean, nTop: Int,
+           offset: Int = 0): Column =
+    GraftSqlShim.column(CellTopK(GraftSqlShim.expression(vec),
+      new CellTopKKernel(cents.map(_._1), cents.map(_._2),
+        cents.map(c => halfNorm2(c._2)), divisor, floatInput, nTop,
+        offset)))
+
+  /** Micro-unit DOUBLE vectors ([[graft.llm.Clustering]] `cellSort`,
+    * the trained IVF-PQ grid): score divided by `divisor`.
     */
   def rankD(vec: Column, cents: Array[(Int, Array[Double])],
             divisor: Double, nTop: Int, offset: Int = 0): Column =
-    GraftSqlShim.column(CellTopK(GraftSqlShim.expression(vec),
-      new CellTopKKernel(cents.map(_._1), cents.map(_._2),
-        cents.map(c => halfNorm2(c._2)), divisor,
-        floatInput = false, nTop, offset)))
+    rank(vec, cents, divisor, floatInput = false, nTop, offset)
 
-  /** Float-vector sibling ([[graft.llm.Similarity]] `cellRankExpr` /
-    * `pqCodeExpr`): codewords widen float→double exactly, scores are
-    * `round(dot − ‖c‖²/2, 6)` undivided (divisor 1.0 is bitwise
-    * identity). Half-norms fold in double over the widened values —
-    * the same order as `float_dot(c, c)`'s accumulation.
+  /** Float-vector sibling ([[graft.llm.Similarity]] IVF cell ranking):
+    * codewords widen float→double exactly, scores are
+    * `round(dot − ‖c‖²/2, 6)` undivided. Half-norms fold in double over
+    * the widened values — the same order as `float_dot(c, c)`'s
+    * accumulation.
     */
   def rankF(vec: Column, cents: Array[(Int, Array[Float])],
             nTop: Int, offset: Int = 0): Column =
-    GraftSqlShim.column(CellTopK(GraftSqlShim.expression(vec),
-      new CellTopKKernel(cents.map(_._1),
-        cents.map(_._2.map(_.toDouble)),
-        cents.map(c => halfNorm2(c._2.map(_.toDouble))), 1.0,
-        floatInput = true, nTop, offset)))
+    rank(vec, cents.map(c => (c._1, c._2.map(_.toDouble))), 1.0,
+      floatInput = true, nTop, offset)
 }

@@ -102,8 +102,8 @@ object Clustering {
 
   /** [[train]] over an ALREADY-quantised `(vec_id, qv)` frame, with
     * materialisation policy left to the caller — the seam that lets
-    * [[graft.llm.Similarity.IvfPqTrainedModel.train]] share one
-    * quantised frame between concurrent trainings.
+    * [[graft.llm.Similarity.IvfPqModel.train]] share one quantised
+    * frame between concurrent trainings.
     */
   private[llm] def trainQ(embq: DataFrame, k: Int, iters: Int,
                           dim: Int): Array[(Int, Array[Double])] = {

@@ -1,7 +1,9 @@
 package graft.llm
 
+import scala.reflect.ClassTag
+
 import graft.llm.TextExprs._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +19,11 @@ import org.apache.spark.sql.functions._
   *    deterministic integer hyperplanes; candidates restricted to the
   *    query's bucket, so the pair join is keyed on bucket id and never
   *    goes quadratic.
+  *  - the IVF-PQ path — one [[IvfPqModel]] (seeded float, Lloyd-trained
+  *    micro-unit, or residual-encoded), one [[ivfPqIndex]], one
+  *    [[ivfPqSearch]] and one exact-rerank tail [[ivfPqRerankSearch]]
+  *    serve every ANN gate, the maintenance reports and the streaming
+  *    twin.
   *
   * Cosines are computed with a sequential left fold (bit-identical in the
   * DuckDB oracle), elements widened float→double before any arithmetic.
@@ -157,6 +164,21 @@ object Similarity {
     s"(CASE $whens ELSE ${1L << MaxPlanes} END)"
   }
 
+
+  /** Per-query top-k of a scored `(qid, vec_id, <score>)` frame: rank
+    * by (score desc, vec_id asc) within each qid — the tie-break every
+    * ANN path and its DuckDB twin share — keep ranks ≤ k and emit
+    * `lead ++ (rank, vec_id, score)`.
+    */
+  private def topK(scored: DataFrame, score: String, k: Int,
+                   lead: Seq[String] = Seq("qid")): DataFrame = {
+    val w = Window.partitionBy("qid")
+      .orderBy(col(score).desc, col("vec_id").asc)
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select((lead ++ Seq("rank", "vec_id", score)).map(col): _*)
+  }
+
   /** Exact top-k neighbours for each query vector (queries = `vec_id <
     * nQueries`), self excluded. Rank determinism: round(cos, 6) desc then
     * vec_id asc.
@@ -167,17 +189,30 @@ object Similarity {
     val q = broadcast(withNorm.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn")))
-    val scored = q.join(withNorm, col("vec_id") =!= col("qid"))
-      .withColumn("cos", expr(dotSql("qe", "embedding")(SparkD))
-        / (col("qn") * col("nrm")))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        col("cos_r").as("cos_sim"))
+    topK(q.join(withNorm, col("vec_id") =!= col("qid"))
+      .withColumn("cos_sim", round(expr(dotSql("qe", "embedding")(SparkD))
+        / (col("qn") * col("nrm")), 6)), "cos_sim", k)
   }
+
+  /** The first `n` vectors of `frame` as `(cid, vector)` seeds, cid
+    * order — the deterministic seed rule every quantiser here (and its
+    * DuckDB twin) starts from.
+    */
+  private def seedRows[T: ClassTag](frame: DataFrame, vcol: String,
+                                    n: Int): Array[(Int, Array[T])] =
+    frame.where(col("vec_id") < n)
+      .select(col("vec_id").cast("int"), col(vcol))
+      .collect()
+      .map(r => (r.getInt(0), r.getSeq[T](1).toArray))
+      .sortBy(_._1)
+
+  private def widen(cs: Array[(Int, Array[Float])])
+      : Array[(Int, Array[Double])] =
+    cs.map { case (cid, v) => (cid, v.map(_.toDouble)) }
+
+  /** Element 1 of a ranked (ns, cid) array: the nearest cell / code. */
+  private def winner(ranked: Column): Column =
+    element_at(ranked, 1).getField("cid")
 
   /** IVF-style ANN: a deterministic coarse quantiser (first
     * `nCentroids` vectors stand in for trained k-means centroids; the
@@ -187,13 +222,10 @@ object Similarity {
     *
     * Scale: the centroid table is MODEL-sized (a trained k-means output
     * in production), so it travels to executors as literals — the per-row
-    * cell assignment is a pure array-expression argmax
-    * (`array_sort` over per-centroid score structs) with ZERO exchanges.
-    * The previous shape (`crossJoin(cents)` + `row_number` window)
-    * amplified the corpus nCentroids× through a shuffle just to pick each
-    * row's max — at 100 TB that shuffle IS the job. The search join is
-    * keyed on cell id with the tiny probe side broadcast — candidates per
-    * query are corpus/nCells·nProbe.
+    * cell assignment is one fused codegen'd argmax
+    * ([[graft.functions.CellTopK]]) with ZERO exchanges. The search join
+    * is keyed on cell id with the tiny probe side broadcast — candidates
+    * per query are corpus/nCells·nProbe.
     */
   def ivfTopK(emb: DataFrame, nCentroids: Int = 16, nProbe: Int = 2,
               nQueries: Int = 8, k: Int = 5,
@@ -202,28 +234,14 @@ object Similarity {
     // cells are the recall/cost unit — production targets ~1e6 vectors
     // per cell (nCentroids ≈ corpus_rows / 1e6), and nProbe trades
     // recall for probed-candidate volume at that granularity
-    graft.llm.Clustering.requireScaledK("ivfTopK", nCentroids,
-      fixtureScale)
-    val cents: Array[(Int, Array[Float])] = emb
-      .where(col("vec_id") < nCentroids)
-      .select(col("vec_id").cast("int"), col("embedding"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    ivfTopKWith(emb, cents, nProbe, nQueries, k)
+    Clustering.requireScaledK("ivfTopK", nCentroids, fixtureScale)
+    ivfTopKWith(emb, seedRows[Float](emb, "embedding", nCentroids),
+      nProbe, nQueries, k)
   }
 
-  // (the sequential float→double half-norm fold now lives in
-  // graft.functions.CellTopK.rankF — same element order as
-  // float_dot(ce, ce), bit-identical to the oracle's cn2)
-
-  /** Per-row top-`nTop` cell ranking over a literal centroid set,
-    * (score desc, cid asc) via (−score, cid) — round(x,6) never yields
-    * −0.0, so negation can't split a tie. Zero exchanges. ONE fused
-    * codegen'd expression ([[graft.functions.CellTopK]]) in place of
-    * the array_sort-of-structs form: bit-identical output
-    * (spec-pinned), centroid-independent generated source (no janino
-    * recompile per trained model), one tight loop per row.
+  /** Per-row top-`nTop` cell ranking over a literal float centroid set,
+    * (score desc, cid asc) — one fused codegen'd expression
+    * ([[graft.functions.CellTopK]]), zero exchanges.
     */
   private def cellRankExpr(cents: Array[(Int, Array[Float])],
                            vecCol: Column = col("embedding"),
@@ -244,12 +262,7 @@ object Similarity {
   def trainIvfCentroids(emb: DataFrame, k: Int = 16, iters: Int = 4,
                         dim: Int = 64): Array[(Int, Array[Float])] = {
     graft.functions.FloatVecDot.register(emb.sparkSession)
-    var cents: Array[(Int, Array[Float])] = emb
-      .where(col("vec_id") < k)
-      .select(col("vec_id").cast("int"), col("embedding"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
+    var cents = seedRows[Float](emb, "embedding", k)
     // the per-dimension mean columns index element_at(embedding, i+1):
     // a shorter vector yields nulls that either throw on getDouble or
     // silently poison a cell mean — fail fast on the seed set instead
@@ -264,8 +277,7 @@ object Similarity {
       avg(element_at(col("embedding"), i + 1).cast("double")).as(s"c$i"))
     for (_ <- 0 until iters) {
       val means = emb
-        .withColumn("cell", element_at(cellRankExpr(cents), 1)
-          .getField("cid"))
+        .withColumn("cell", winner(cellRankExpr(cents)))
         .groupBy("cell").agg(aggs.head, aggs.tail: _*)
         .collect()
         .map(r => r.getInt(0) ->
@@ -284,8 +296,7 @@ object Similarity {
                   k: Int = 5): DataFrame = {
     graft.functions.FloatVecDot.register(emb.sparkSession)
     val assigned = emb
-      .withColumn("cell",
-        element_at(cellRankExpr(cents), 1).getField("cid"))
+      .withColumn("cell", winner(cellRankExpr(cents)))
       .withColumn("nrm", expr(normSql("embedding")(SparkD)))
       .select("vec_id", "embedding", "cell", "nrm")
     val probes = broadcast(emb.where(col("vec_id") < nQueries)
@@ -294,136 +305,102 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("cell"))
       .withColumn("qn", expr(normSql("qe")(SparkD))))
-    val cand = probes.join(assigned, Seq("cell"))
+    topK(probes.join(assigned, Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos", expr(dotSql("qe", "embedding")(SparkD))
-        / (col("qn") * col("nrm")))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        col("cos_r").as("cos_sim"))
+      .withColumn("cos_sim", round(expr(dotSql("qe", "embedding")(SparkD))
+        / (col("qn") * col("nrm")), 6)), "cos_sim", k)
   }
 
-  /** Product-quantisation ANN (PQ + asymmetric-distance scoring): the
-    * embedding is split into `m` subvectors; each subspace has a
-    * 16-codeword codebook (deterministically the first `nCodes`
-    * vectors' subvectors — swap in per-subspace k-means exactly as
-    * [[trainIvfCentroids]] does for IVF); a vector is stored as `m`
-    * 1-byte codes; a query scores a candidate by summing per-subspace
-    * dots against the CODEWORDS its codes name, never touching the
-    * original vector.
+  // ---- PQ and IVF-PQ: one model, one index, one search, one rerank --
+
+  /** Product-quantisation ANN (PQ + asymmetric-distance scoring),
+    * q_sim4: the embedding is split into `m` subvectors; each subspace
+    * has a 16-codeword codebook (deterministically the first `nCodes`
+    * vectors' subvectors — [[trainPqCodebooks]] is the k-means twin);
+    * a vector is stored as `m` 1-byte codes; a query scores a candidate
+    * by summing per-subspace dots against the CODEWORDS its codes name,
+    * never touching the original vector.
     *
     * Scale story: at dim 64 the raw embedding is 256 B, the PQ code is
     * 8 B — the 32× compression is what lets a 100 TB corpus's index
     * live in cluster memory. Encoding is a zero-shuffle literal argmax
     * per subspace (same shape as the IVF assignment); scoring joins a
     * broadcast query table against the codes and reads codeword dots
-    * from literal tables — the corpus scan carries 8 small ints per
-    * row, not the embedding.
+    * from literal tables.
     *
     * Parity: per-subspace argmin(L2) is computed as argmax(dot − ‖c‖²/2)
-    * rounded to 6 dp with (−score, cid) struct-sort tie-break; the
-    * DuckDB twin re-derives the codebooks from the same `vec_id <
-    * nCodes` rule, so the oracle is fully independent.
+    * rounded to 6 dp with cid tie-break; the DuckDB twin re-derives the
+    * codebooks from the same `vec_id < nCodes` rule, so the oracle is
+    * fully independent.
     */
   def pqTopK(emb: DataFrame, nCodes: Int = 16, m: Int = 8,
              nQueries: Int = 8, k: Int = 5,
              dim: Int = 64): DataFrame =
-    pqTopKWith(emb, pqCodebooks(emb, nCodes, m, dim), m, nQueries, k,
-      dim)
+    pqTopKWith(emb, pqCodebooks(emb, nCodes, m, dim), nQueries, k)
 
-  /** PQ/ADC search against an explicit codebook set (seed-derived via
-    * the gate rule, or trained via [[trainPqCodebooks]]) — the same
+  /** PQ/ADC scan against an explicit float codebook set (seed-derived
+    * via the gate rule, or trained via [[trainPqCodebooks]]) — the same
     * split as [[ivfTopK]]/[[ivfTopKWith]].
     */
   def pqTopKWith(emb: DataFrame,
                  codebooks: Array[Array[(Int, Array[Float])]],
-                 m: Int = 8, nQueries: Int = 8, k: Int = 5,
-                 dim: Int = 64): DataFrame = {
-    graft.functions.FloatVecDot.register(emb.sparkSession)
-    val subDim = dim / m
-    require(subDim * m == dim, s"dim $dim not divisible by m $m")
-    def sub(c: Column, s: Int): Column = slice(c, s * subDim + 1, subDim)
-    val coded = emb.select(col("vec_id") +: (0 until m).map(s =>
-      pqCodeExpr(codebooks, col("embedding"), s, subDim).as(s"c$s")): _*)
-    // queries keep their raw embedding (asymmetric distance)
-    val q = broadcast(emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe")))
-    // codeword lookup per subspace as a literal nested array: the
-    // score never touches the candidate's embedding
-    val cwLit: Array[Column] = Array.tabulate(m)(s =>
-      typedLit(codebooks(s).map(_._2.toSeq).toSeq))
-    val scoreCol = (0 until m).map { s =>
-      call_function("float_dot", sub(col("qe"), s),
-        element_at(cwLit(s), col(s"c$s") + 1))
-    }.reduce(_ + _)
-    val scored = q.join(coded, col("vec_id") =!= col("qid"))
-      .withColumn("score_r", round(scoreCol, 6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("score_r").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        col("score_r").as("pq_score"))
-  }
+                 nQueries: Int = 8, k: Int = 5): DataFrame =
+    adcScan(emb, IvfPqModel(Array.empty, codebooks.map(widen),
+      micro = false), nQueries, k)
 
   /** PQ codebooks: codebooks(s) = the `nCodes` codewords of subspace
-    * s, deterministically the first `nCodes` vectors' subvectors —
-    * swap in per-subspace k-means exactly as [[trainIvfCentroids]]
-    * does for IVF. Shared by [[pqTopK]] and [[ivfPqTopK]].
+    * s, deterministically the first `nCodes` vectors' subvectors.
+    * Shared by [[pqTopK]] and [[IvfPqModel.seed]].
     */
   private def pqCodebooks(emb: DataFrame, nCodes: Int, m: Int,
-                          dim: Int): Array[Array[(Int, Array[Float])]] = {
+                          dim: Int): Array[Array[(Int, Array[Float])]] =
+    seedBooks(seedRows[Float](emb, "embedding", nCodes), nCodes, m, dim,
+      "pqCodebooks")
+
+  /** Split seed vectors into per-subspace codebooks. Codes are looked
+    * up by ARRAY POSITION (`element_at(books, code + 1)`) while the
+    * ranking emits seed cids — only sound when the seed set is exactly
+    * 0..nCodes-1, so anything else fails fast instead of silently
+    * scoring against the wrong codeword.
+    */
+  private def seedBooks[T: ClassTag](seeds: Array[(Int, Array[T])],
+                                     nCodes: Int, m: Int, dim: Int,
+                                     op: String)
+      : Array[Array[(Int, Array[T])]] = {
     val subDim = dim / m
-    val seeds = emb.where(col("vec_id") < nCodes)
-      .select(col("vec_id").cast("int"), col("embedding"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    seeds.foreach { case (cid, v) =>
-      require(v.length == dim,
-        s"pqCodebooks: dim=$dim but vector $cid has ${v.length}")
-    }
-    // codes are looked up by ARRAY POSITION (element_at(cwLit, code+1))
-    // while the ranking emits seed cids — only sound when the seed set
-    // is exactly 0..nCodes-1; fail fast instead of silently scoring
-    // against the wrong codeword
+    require(subDim * m == dim, s"dim $dim not divisible by m $m")
     require(seeds.map(_._1).toSeq == (0 until nCodes),
-      s"pqCodebooks: seed vec_ids must be exactly 0..${nCodes - 1}, " +
-        "got " + seeds.map(_._1).mkString(","))
-    Array.tabulate(m)(s =>
-      seeds.map { case (cid, v) =>
-        (cid, v.slice(s * subDim, (s + 1) * subDim))
-      })
+      s"$op: seed vec_ids must be exactly 0..${nCodes - 1}, got " +
+        seeds.map(_._1).mkString(","))
+    seeds.foreach { case (cid, v) =>
+      require(v.length == dim, s"$op: dim=$dim but vector $cid has " +
+        s"${v.length}")
+    }
+    Array.tabulate(m)(s => seeds.map { case (cid, v) =>
+      (cid, v.slice(s * subDim, (s + 1) * subDim))
+    })
   }
 
-  /** Per-subspace k-means (Lloyd) training of the PQ codebooks,
-    * seeded from the deterministic gate rule — the trained twin the
-    * [[pqCodebooks]] scaladoc promises, mirroring
-    * [[trainIvfCentroids]] for the coarse quantiser.
-    *
-    * Each iteration is ONE corpus scan: the per-subspace code is the
-    * zero-shuffle literal argmax, the m subvectors are unpivoted with
-    * a row-local explode (corpus×m rows, never materialised), and the
-    * new codewords come from a single (s, code) hash aggregate whose
-    * partials combine map-side — model-sized (m·nCodes rows) output
-    * collected to the driver, exactly how a vector store trains its
-    * PQ stage. Empty codes keep their old codeword.
+  /** Per-subspace k-means (Lloyd) training of the float PQ codebooks,
+    * seeded from the deterministic gate rule, mirroring
+    * [[trainIvfCentroids]] for the coarse quantiser. Each iteration is
+    * ONE corpus scan: the per-subspace code is the zero-shuffle literal
+    * argmax, the m subvectors are unpivoted with a row-local explode,
+    * and the new codewords come from a single (s, code) hash aggregate
+    * whose partials combine map-side. Empty codes keep their old
+    * codeword.
     */
   def trainPqCodebooks(emb: DataFrame, nCodes: Int = 16, m: Int = 8,
                        iters: Int = 2, dim: Int = 64)
       : Array[Array[(Int, Array[Float])]] = {
     graft.functions.FloatVecDot.register(emb.sparkSession)
     val subDim = dim / m
-    require(subDim * m == dim, s"dim $dim not divisible by m $m")
     var books = pqCodebooks(emb, nCodes, m, dim)
     for (_ <- 0 until iters) {
       val stacked = emb.select(explode(array((0 until m).map(s =>
         struct(lit(s).as("s"),
-          pqCodeExpr(books, col("embedding"), s, subDim).as("code"),
+          winner(graft.functions.CellTopK.rankF(col("embedding"),
+            books(s), nTop = 1, offset = s * subDim)).as("code"),
           slice(col("embedding"), s * subDim + 1, subDim).as("sv"))
       ): _*)).as("x"))
         .select(col("x.s"), col("x.code"), col("x.sv"))
@@ -442,113 +419,248 @@ object Similarity {
     books
   }
 
-  /** Per-subspace PQ code: argmax(round(dot − ‖c‖²/2, 6)) with cid
-    * tie-break — identical ranking rule to the IVF assignment. A pure
-    * array-expression projection: zero exchanges.
+  /** Micro-unit rescale of the trained grid: dot products of
+    * micro-unit vectors divide by 1e12 back to cosine units.
     */
-  private def pqCodeExpr(codebooks: Array[Array[(Int, Array[Float])]],
-                         vecCol: Column, s: Int, subDim: Int): Column =
-    element_at(graft.functions.CellTopK.rankF(vecCol, codebooks(s),
-      nTop = 1, offset = s * subDim), 1).getField("cid")
+  private val MicroScale = 1.0e12
 
-  /** IVF-PQ (coarse cells + asymmetric-distance scoring over codes):
-    * the composition that actually indexes a 100 TB corpus. The IVF
-    * coarse quantiser ([[ivfTopK]]'s literal-argmax cell assignment)
-    * prunes the scan to the query's `nProbe` nearest cells; within
-    * probed cells candidates are scored by PQ/ADC ([[pqTopK]]'s
-    * m×1-byte codes against broadcast codebooks), never touching the
-    * raw embedding.
-    *
-    * Scale story: the corpus-resident index row is (cell, m codes) —
-    * 8 B of codes per vector at the gate shape — and the search reads
-    * only corpus/nCells·nProbe of them per query. IVF alone still
-    * scans raw vectors inside probed cells (256 B/row at dim 64); PQ
-    * alone scans every row's codes. IVF-PQ reads 1/nCells·nProbe of
-    * the corpus at 1/32 the bytes per row — both pruning axes at
-    * once, which is why it is the standard billion-vector layout.
-    * Cell assignment and code computation are zero-shuffle literal
-    * projections; the only exchange is the (cell)-keyed candidate
-    * join with the probe side broadcast. Partitioning the index by
-    * `cell` (bucketed mirror, as SCALE.md measures for the §2
-    * pipeline) makes probing a partition-pruned read.
-    *
-    * Parity: with `nProbe = nCentroids` every cell is probed and the
-    * result reproduces [[pqTopK]] exactly (SimilaritySpec pins this);
-    * the DuckDB twin re-derives cells AND codebooks from the same
-    * deterministic seed rules.
-    */
-  /** The model state of an IVF-PQ index: coarse centroids + per-
-    * subspace codebooks — bounded, driver-resident, broadcast to the
-    * scan as literals (exactly the artifact a vector store persists
-    * after training). [[seed]] derives both from the deterministic
-    * gate rules; [[trained]] runs k-means on each
-    * ([[Similarity.trainIvfCentroids]] / [[Similarity.trainPqCodebooks]]).
-    */
-  final case class IvfPqModel(
-      cents: Array[(Int, Array[Float])],
-      codebooks: Array[Array[(Int, Array[Float])]])
-
-  object IvfPqModel {
-    def seed(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
-             m: Int = 8, dim: Int = 64): IvfPqModel =
-      IvfPqModel(seedCentroids(emb, nCentroids),
-        pqCodebooks(emb, nCodes, m, dim))
-
-    def trained(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
-                m: Int = 8, iters: Int = 2,
-                dim: Int = 64): IvfPqModel =
-      IvfPqModel(trainIvfCentroids(emb, nCentroids, iters, dim),
-        trainPqCodebooks(emb, nCodes, m, iters, dim))
+  /** The micro-unit projection `(vec_id, qv)` every trained model reads. */
+  private def quantised(emb: DataFrame): DataFrame = {
+    implicit val d: Dialect = SparkD
+    emb.select(col("vec_id"),
+      expr(Clustering.quantSql("embedding")).as("qv"))
   }
 
-  private def seedCentroids(emb: DataFrame,
-                            nCentroids: Int): Array[(Int, Array[Float])] =
-    emb.where(col("vec_id") < nCentroids)
-      .select(col("vec_id").cast("int"), col("embedding"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
+  /** The model state of an IVF-PQ index: coarse centroids, per-subspace
+    * codebooks and, for residual encoding, the centroids snapped to the
+    * integer micro grid (`centsQ`). Bounded, driver-resident and baked
+    * into plans as literals — the artifact a vector store persists
+    * after training. m and subDim come from the books.
+    *
+    * The model hides its two arithmetic grids behind cell rank,
+    * subspace codes and ADC score:
+    *  - float (`micro = false`, [[IvfPqModel.seed]]): vectors are the
+    *    raw `embedding`; cells and codes rank by round(dot − ‖c‖²/2, 6)
+    *    over the exactly-widened float codewords; the score is
+    *    round(Σ_s float_dot(q_s, codeword_s), 6);
+    *  - micro (`micro = true`, [[IvfPqModel.train]],
+    *    [[IvfPqModel.residual]]): vectors are the micro-unit `qv`
+    *    (integers held in doubles, so Lloyd sums are exact under any
+    *    partitioning and the DuckDB twin re-derives the training
+    *    bit-for-bit); ranks and the fused [[graft.functions.AdcScore]]
+    *    divide by 1e12. With `centsQ` the codes quantise the residual
+    *    x − centsQ(cell(x)) and the score's fold starts from the
+    *    query·snapped-centroid dot — the canonical IVF-ADC of Jégou,
+    *    Douze & Schmid (TPAMI 2011).
+    *
+    * Empty `cents` is a PQ-only model, served by the un-pruned scan
+    * (q_sim4, q_sim11) alone.
+    */
+  final case class IvfPqModel(
+      cents: Array[(Int, Array[Double])],
+      books: Array[Array[(Int, Array[Double])]],
+      micro: Boolean,
+      centsQ: Option[Array[(Int, Array[Double])]] = None) {
+    require(micro || centsQ.isEmpty,
+      "residual encoding needs the integer micro grid")
+    val m: Int = books.length
+    val subDim: Int = books.head.head._2.length
+    def dim: Int = m * subDim
 
-  /** The corpus-resident IVF-PQ index frame: `(vec_id, cell,
-    * c0..c{m-1})` — ONE zero-shuffle projection; the raw embedding
-    * never leaves the scan. Persist it partitioned by `cell`
+    private[llm] def vcol: String = if (micro) "qv" else "embedding"
+
+    /** `(vec_id, <vector>)` on the model's grid. */
+    def vectors(emb: DataFrame): DataFrame =
+      if (micro) quantised(emb) else emb
+
+    /** The query frame `(qid, qe)`: the first `nQueries` vectors on the
+      * model's grid (raw embeddings — asymmetric distance).
+      */
+    def queries(emb: DataFrame, nQueries: Int): DataFrame =
+      vectors(emb).where(col("vec_id") < nQueries)
+        .select(col("vec_id").as("qid"), col(vcol).as("qe"))
+
+    private def rank(cs: Array[(Int, Array[Double])], v: Column,
+                     nTop: Int, offset: Int = 0): Column =
+      graft.functions.CellTopK.rank(v, cs,
+        if (micro) MicroScale else 1.0, floatInput = !micro, nTop, offset)
+
+    /** Ranked (ns, cid) array of the `nTop` nearest cells. */
+    private[llm] def cellRank(v: Column, nTop: Int): Column =
+      rank(cents, v, nTop)
+
+    /** The m subspace code columns `c0..c{m-1}` of vector `v`. */
+    private[llm] def codes(v: Column): Seq[Column] =
+      (0 until m).map(s =>
+        winner(rank(books(s), v, 1, s * subDim)).as(s"c$s"))
+
+    /** ADC score of query `qe` against the candidate's `c0..c{m-1}`
+      * codes (and, residual-encoded, its `cell`), rounded to 6 dp in
+      * cosine units.
+      */
+    private[graft] def score(qe: Column): Column = {
+      val codeCols = (0 until m).map(s => col(s"c$s"))
+      if (!micro) {
+        // codeword lookup per subspace as a literal nested array: the
+        // score never touches the candidate's embedding
+        round((0 until m).map { s =>
+          call_function("float_dot", slice(qe, s * subDim + 1, subDim),
+            element_at(typedLit(books(s).map(_._2.map(_.toFloat).toSeq)
+              .toSeq), codeCols(s) + 1))
+        }.reduce(_ + _), 6)
+      } else centsQ match {
+        case Some(cq) => graft.functions.AdcScore.scoreWithCell(qe,
+          col("cell"), codeCols, books, cq, subDim, MicroScale)
+        case None => graft.functions.AdcScore.score(qe, codeCols, books,
+          subDim, MicroScale)
+      }
+    }
+
+    private[llm] def dot(a: Column, b: Column): Column =
+      call_function(if (micro) "double_dot" else "float_dot", a, b)
+
+    private[llm] def register(s: SparkSession): Unit =
+      if (micro) graft.functions.DoubleVecDot.register(s)
+      else graft.functions.FloatVecDot.register(s)
+
+    /** This model, after checking a caller's `dim` against it. */
+    private[llm] def withDim(d: Int): IvfPqModel = {
+      require(d == dim, s"dim $d does not match the model's $dim")
+      this
+    }
+  }
+
+  object IvfPqModel {
+    /** Float model from the deterministic gate rules: the first
+      * `nCentroids` vectors are the centroids, the first `nCodes`
+      * vectors' subvectors the codebooks.
+      */
+    def seed(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
+             m: Int = 8, dim: Int = 64): IvfPqModel =
+      IvfPqModel(widen(seedRows[Float](emb, "embedding", nCentroids)),
+        pqCodebooks(emb, nCodes, m, dim).map(widen), micro = false)
+
+    /** Micro model with both quantisers trained: exact micro-unit
+      * k-means centroids ([[Clustering.trainQ]]) and exact Lloyd PQ
+      * codebooks ([[pqTrainedCodebooks]]). The two trainings are
+      * INDEPENDENT, so they run concurrently ([[inParallel]]) over ONE
+      * shared lazily-checkpointed quantised frame — plan-private (never
+      * the session CacheManager), materialised once, its blocks
+      * reclaimed by the ContextCleaner when the frame becomes
+      * unreachable on return. Identical models to the sequential form.
+      */
+    def train(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
+              m: Int = 8, iters: Int = 2, dim: Int = 64): IvfPqModel = {
+      graft.functions.DoubleVecDot.register(emb.sparkSession)
+      val embq = quantised(emb).localCheckpoint(eager = false)
+      val (cents, books) = inParallel(
+        Clustering.trainQ(embq, nCentroids, iters, dim),
+        pqTrainedCodebooksQ(embq, nCodes, m, iters, dim))
+      IvfPqModel(cents, books, micro = true)
+    }
+
+    /** Residual-encoded micro model: k-means centroids, then residual
+      * codebooks trained against them ([[residualOn]]).
+      */
+    def residual(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
+                 m: Int = 8, iters: Int = 2, dim: Int = 64): IvfPqModel =
+      residualOn(Clustering.train(emb, nCentroids, iters, dim), emb,
+        nCodes, m, iters, dim)
+
+    /** Residual codebooks trained on `emb` against an EXISTING coarse
+      * quantiser (the q_sim8 matrix shares its trained centroids; the
+      * maintenance reports retrain books against repaired cells).
+      *
+      * Hash-gate exactness: residuals must stay on the integer micro
+      * grid or the Lloyd sums become partition-order dependent. The
+      * trained centroid components are exact rationals S/n, so the
+      * residual is taken against the centroid snapped with SQL-round
+      * semantics ([[qround]]); the ≤0.5-micro-unit snap error is orders
+      * below the PQ quantisation error. Cell ASSIGNMENT and probing
+      * still use the full-precision centroids.
+      */
+    def residualOn(cents: Array[(Int, Array[Double])], emb: DataFrame,
+                   nCodes: Int = 16, m: Int = 8, iters: Int = 2,
+                   dim: Int = 64): IvfPqModel = {
+      graft.functions.DoubleVecDot.register(emb.sparkSession)
+      // residuals index the snapped-centroid literal by cell id
+      require(cents.map(_._1).toSeq == (0 until cents.length),
+        "IvfPqModel.residualOn: centroid cids must be exactly " +
+          s"0..${cents.length - 1}, got " + cents.map(_._1).mkString(","))
+      val centsQ = cents.map { case (cid, v) => (cid, v.map(qround)) }
+      // cached for the bounded training loop, unpersisted before return
+      // (CacheManager-free for the caller, Clustering.train's pattern)
+      val resid = residualFrame(quantised(emb), cents, centsQ)
+        .select("vec_id", "rv").cache()
+      try {
+        val books0 = seedBooks(seedRows[Double](resid, "rv", nCodes),
+          nCodes, m, dim, "IvfPqModel.residualOn")
+        IvfPqModel(cents, lloydSubspaceBooks(resid, "rv", books0, iters),
+          micro = true, Some(centsQ))
+      } finally resid.unpersist(false)
+    }
+  }
+
+  /** (vec_id, qv, cell, rv): trained-cell assignment (full-precision
+    * literal argmax) + exact integer residual vs the snapped centroid.
+    * Pure projection — zero exchanges.
+    */
+  private def residualFrame(embq: DataFrame,
+                            cents: Array[(Int, Array[Double])],
+                            centsQ: Array[(Int, Array[Double])])
+      : DataFrame = {
+    val cqLit = typedLit(centsQ.map(_._2.toSeq).toSeq)
+    assign(embq, cents)
+      .withColumn("rv", zip_with(col("qv"),
+        element_at(cqLit, col("cell") + 1), (a, b) => a - b))
+  }
+
+  /** `embq` with each micro vector's nearest cell of `cents`. */
+  private def assign(embq: DataFrame,
+                     cents: Array[(Int, Array[Double])]): DataFrame =
+    embq.withColumn("cell", winner(
+      graft.functions.CellTopK.rankD(col("qv"), cents, MicroScale, 1)))
+
+  /** The corpus-resident IVF-PQ index frame `(vec_id, cell,
+    * c0..c{m-1})` for any model — ONE zero-shuffle projection; the raw
+    * embedding never leaves the scan, and the row-local encode makes
+    * an incremental build (old ∪ new arrivals) EXACTLY the from-scratch
+    * encode. Persist it partitioned by `cell`
     * (`write.partitionBy("cell")`) and [[ivfPqSearch]]'s static
     * probe-cell filter becomes a partition-pruned read.
     */
-  def ivfPqIndex(emb: DataFrame, model: IvfPqModel, m: Int = 8,
-                 dim: Int = 64): DataFrame = {
-    graft.functions.FloatVecDot.register(emb.sparkSession)
-    val subDim = dim / m
-    require(subDim * m == dim, s"dim $dim not divisible by m $m")
-    val cellRank = cellRankExpr(model.cents)
-    emb.select(
-      col("vec_id") +:
-        element_at(cellRank, 1).getField("cid").as("cell") +:
-        (0 until m).map(s =>
-          pqCodeExpr(model.codebooks, col("embedding"), s, subDim)
-            .as(s"c$s")): _*)
+  def ivfPqIndex(emb: DataFrame, model: IvfPqModel): DataFrame = {
+    model.register(emb.sparkSession)
+    val v = col(model.vcol)
+    model.centsQ match {
+      case None => model.vectors(emb).select(col("vec_id") +:
+        winner(model.cellRank(v, 1)).as("cell") +: model.codes(v): _*)
+      case Some(cq) =>
+        residualFrame(model.vectors(emb), model.cents, cq)
+          .select(col("vec_id") +: col("cell") +: model.codes(col("rv")): _*)
+    }
   }
 
-  /** ADC search over a prebuilt [[ivfPqIndex]] frame. `queries` is a
-    * model-sized `(qid, qe)` frame (raw embeddings — asymmetric
-    * distance). With `staticPrune` the probed cell ids (≤
-    * nQueries·nProbe values, bounded) are collected and pushed as an
-    * IN filter on the index side — over a cell-partitioned index that
-    * is a PartitionFilter, i.e. the serving path reads ONLY the
-    * probed cells' files (AnnProbe measures this; at 100 TB it is the
-    * difference between scanning the corpus and scanning
-    * nProbe/nCells of it).
+  /** ADC search over a prebuilt [[ivfPqIndex]] frame: the probe
+    * broadcast (each query's `nProbe` nearest cells), the cell-keyed
+    * candidate join, self-exclusion, the model's ADC score and the
+    * per-query top-k. `queries` is a model-sized `(qid, qe)` frame on
+    * the model's grid ([[IvfPqModel.queries]]).
+    *
+    * With `staticPrune` the probed cell ids (≤ nQueries·nProbe values,
+    * bounded) are collected and pushed as an IN filter on the index
+    * side — over a cell-partitioned index that is a PartitionFilter,
+    * i.e. the serving path reads ONLY the probed cells' files (AnnProbe
+    * measures this; at 100 TB it is the difference between scanning the
+    * corpus and scanning nProbe/nCells of it).
     */
   def ivfPqSearch(index: DataFrame, queries: DataFrame,
                   model: IvfPqModel, nProbe: Int = 2, k: Int = 5,
-                  m: Int = 8, dim: Int = 64,
                   staticPrune: Boolean = false): DataFrame = {
-    graft.functions.FloatVecDot.register(index.sparkSession)
-    val subDim = dim / m
+    model.register(index.sparkSession)
     val probes = broadcast(queries
       .withColumn("cell",
-        explode(cellRankExpr(model.cents, col("qe"), nTop = nProbe)
-          .getField("cid")))
+        explode(model.cellRank(col("qe"), nProbe).getField("cid")))
       .select(col("qid"), col("qe"), col("cell")))
     val pruned =
       if (!staticPrune) index
@@ -557,164 +669,223 @@ object Similarity {
           .map(_.getInt(0))
         index.where(col("cell").isin(cells.toIndexedSeq: _*))
       }
-    val cwLit: Array[Column] = Array.tabulate(m)(s =>
-      typedLit(model.codebooks(s).map(_._2.toSeq).toSeq))
-    val scoreCol = (0 until m).map { s =>
-      call_function("float_dot", slice(col("qe"), s * subDim + 1, subDim),
-        element_at(cwLit(s), col(s"c$s") + 1))
-    }.reduce(_ + _)
     // each vector lives in exactly one cell and a query's probed cells
     // are distinct, so (qid, vec_id) pairs are unique — no dedup stage
-    val scored = probes.join(pruned, Seq("cell"))
+    topK(probes.join(pruned, Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("score_r", round(scoreCol, 6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("score_r").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        col("score_r").as("pq_score"))
+      .withColumn("pq_score", model.score(col("qe"))),
+      "pq_score", k)
   }
 
+  /** Production ANN's last stage: ADC top-`r` candidates
+    * ([[ivfPqSearch]]), re-ranked by EXACT cosine. The exact pass
+    * broadcast-joins the r·nQueries candidate ids back to `corpus` (the
+    * model's [[IvfPqModel.vectors]] frame) by vec_id — every post-join
+    * frame is candidate-sized — then one exact dot per candidate and
+    * the per-query top-k. Any ground-truth neighbour that reaches the
+    * candidate set is returned, so recall equals candidate coverage:
+    * the ADC ranking error is erased for r exact dots per query.
+    */
+  def ivfPqRerankSearch(index: DataFrame, corpus: DataFrame,
+                        queries: DataFrame, model: IvfPqModel,
+                        nProbe: Int = 8, r: Int = 160,
+                        k: Int = 5): DataFrame = {
+    val cand = ivfPqSearch(index, queries, model, nProbe, r)
+      .select(col("qid"), col("vec_id"))
+    val v = col(model.vcol)
+    val qn = queries.withColumn("qn", sqrt(model.dot(col("qe"), col("qe"))))
+    topK(corpus.join(broadcast(cand), "vec_id").join(broadcast(qn), "qid")
+      .withColumn("cos_sim", round(model.dot(col("qe"), v)
+        / (col("qn") * sqrt(model.dot(v, v))), 6)), "cos_sim", k)
+  }
+
+  /** Index `emb` under `model` and serve its first `nQueries` vectors —
+    * the composed gate shape: ADC top-k, or with `r > 0` the ADC top-r
+    * re-ranked exactly to top-k.
+    */
+  private[graft] def ivfPqServe(emb: DataFrame, model: IvfPqModel,
+                                nProbe: Int, nQueries: Int, k: Int,
+                                r: Int = 0): DataFrame = {
+    val index = ivfPqIndex(emb, model)
+    val queries = model.queries(emb, nQueries)
+    if (r == 0) ivfPqSearch(index, queries, model, nProbe, k)
+    else ivfPqRerankSearch(index, model.vectors(emb), queries, model,
+      nProbe, r, k)
+  }
+
+  /** Un-pruned ADC scan: every corpus vector's codes scored against
+    * every query (self excluded) — the PQ-only paths q_sim4/q_sim11,
+    * and what [[ivfPqSearch]] reproduces when every cell is probed.
+    */
+  private def adcScan(emb: DataFrame, model: IvfPqModel, nQueries: Int,
+                      k: Int): DataFrame = {
+    model.register(emb.sparkSession)
+    val coded = model.vectors(emb)
+      .select(col("vec_id") +: model.codes(col(model.vcol)): _*)
+    topK(coded.join(broadcast(model.queries(emb, nQueries)),
+      col("vec_id") =!= col("qid"))
+      .withColumn("pq_score", model.score(col("qe"))),
+      "pq_score", k)
+  }
+
+  private def scaledK(op: String, k: Int, fixtureScale: Boolean): Int = {
+    Clustering.requireScaledK(op, k, fixtureScale)
+    k
+  }
+
+  /** IVF-PQ (coarse cells + ADC over codes), q_sim10: the composition
+    * that indexes a 100 TB corpus — the corpus-resident row is (cell, m
+    * codes), 8 B of codes per vector, and a search reads only
+    * corpus/nCells·nProbe of them. With `nProbe = nCentroids` it
+    * reproduces [[pqTopK]] exactly (SimilaritySpec pins this).
+    */
   def ivfPqTopK(emb: DataFrame, nCentroids: Int = 16, nProbe: Int = 2,
-                nCodes: Int = 16, m: Int = 8, nQueries: Int = 8,
-                k: Int = 5, dim: Int = 64,
-                fixtureScale: Boolean = false): DataFrame = {
-    graft.llm.Clustering.requireScaledK("ivfPqTopK", nCentroids,
-      fixtureScale)
-    val model = IvfPqModel.seed(emb, nCentroids, nCodes, m, dim)
-    val queries = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    ivfPqSearch(ivfPqIndex(emb, model, m, dim), queries, model,
-      nProbe, k, m, dim)
+                nQueries: Int = 8, k: Int = 5, dim: Int = 64,
+                fixtureScale: Boolean = false): DataFrame =
+    ivfPqServe(emb, IvfPqModel.seed(emb,
+      scaledK("ivfPqTopK", nCentroids, fixtureScale), dim = dim),
+      nProbe, nQueries, k)
+
+  /** q_sim12: [[ivfPqTopK]] with BOTH quantisers Lloyd-trained on the
+    * micro grid ([[IvfPqModel.train]]); the DuckDB twin re-derives both
+    * trainings with the iterations unrolled.
+    */
+  def ivfPqTrainedTopK(emb: DataFrame, nCentroids: Int = 16,
+                       nProbe: Int = 2, nQueries: Int = 8, k: Int = 5,
+                       dim: Int = 64,
+                       fixtureScale: Boolean = false): DataFrame =
+    ivfPqServe(emb, IvfPqModel.train(emb,
+      scaledK("ivfPqTrainedTopK", nCentroids, fixtureScale), dim = dim),
+      nProbe, nQueries, k)
+
+  /** q_sim15, the canonical serving stack (FAISS's IVFPQ+refine
+    * shape): residual index → per-cell ADC top-160 over 8 probed cells
+    * → exact re-rank to top-k.
+    */
+  def ivfPqResidualRerankTopK(emb: DataFrame, nCentroids: Int = 16,
+                              nQueries: Int = 8, k: Int = 5,
+                              dim: Int = 64,
+                              fixtureScale: Boolean = false)
+      : DataFrame =
+    ivfPqServe(emb, IvfPqModel.residual(emb, scaledK(
+      "ivfPqResidualRerankTopK", nCentroids, fixtureScale), dim = dim),
+      nProbe = 8, nQueries, k, r = 160)
+
+  // The names below are what the benchmark harness
+  // (perfbench/src/Corpus.scala) calls: one-line forwards to the core.
+  // A `dim` the core takes from the model is checked against it, not
+  // ignored.
+
+  /** [[IvfPqModel]] under its residual name. */
+  type IvfPqResidualModel = IvfPqModel
+
+  object IvfPqResidualModel {
+    def train(emb: DataFrame, nCentroids: Int = 16,
+              dim: Int = 64): IvfPqModel =
+      IvfPqModel.residual(emb, nCentroids, dim = dim)
   }
 
-  // ---- trained-codebook PQ, exact end-to-end (q_sim11) -------------
+  def ivfPqResidualIndex(emb: DataFrame, model: IvfPqModel,
+                         dim: Int = 64): DataFrame =
+    ivfPqIndex(emb, model.withDim(dim))
 
-  // (the double half-norm fold — same element order as
-  // `double_dot(cw, cw) / 2` and the oracle's `list_reduce` — now
-  // lives in graft.functions.CellTopK.rankD)
+  def ivfPqResidualRerankSearch(index: DataFrame, corpusQ: DataFrame,
+                                queries: DataFrame, model: IvfPqModel,
+                                k: Int = 5, dim: Int = 64): DataFrame =
+    ivfPqRerankSearch(index, corpusQ, queries, model.withDim(dim), k = k)
 
-  /** Ranked (ns, cid) struct array of a micro-unit vector against
-    * literal DOUBLE centroids/codewords: round((dot − ‖c‖²/2) / 1e12,
-    * 6) with cid tie-break — [[graft.llm.Clustering]]'s assignment
-    * rule. Element 1 is the winner; elements 1..nProbe are the probe
-    * set. Zero exchanges.
-    */
-  private def cellSortD(cw: Array[(Int, Array[Double])],
-                        sv: Column, nTop: Int = 1): Column =
-    graft.functions.CellTopK.rankD(sv, cw, 1.0e12, nTop)
-
-  /** Per-subspace code / cell over literal DOUBLE codebooks on the
-    * micro-unit grid (winner of [[cellSortD]]); `offset` selects the
-    * subspace start inside the full vector without materialising a
-    * slice per row.
-    */
-  private def pqCodeExprD(cw: Array[(Int, Array[Double])],
-                          sv: Column, offset: Int = 0): Column =
-    element_at(graft.functions.CellTopK.rankD(sv, cw, 1.0e12,
-      nTop = 1, offset = offset), 1).getField("cid")
-
-  /** Micro-unit quantised projection shared by the trained-PQ train
-    * and search passes.
-    */
-  private def quantised(emb: DataFrame): DataFrame = {
-    implicit val d: Dialect = SparkD
-    emb.select(col("vec_id"),
-      expr(Clustering.quantSql("embedding")).as("qv"))
-  }
-
-  /** The trained-path ADC rank: score each (qe, c0..c{m-1}) candidate
-    * pair by summing per-subspace query·codeword dots from the
-    * literal trained books (s = 0..m−1 left-to-right), rescale to
-    * cosine units, round, and keep the per-query top k with the
-    * (score desc, vec_id asc) tie-break. ONE definition so the
-    * spec-pinned identities (full probe ≡ un-pruned scan, served ≡
-    * composed gate) cannot drift between call sites.
-    */
-  private def adcTopKD(pairs: DataFrame,
-                       books: Array[Array[(Int, Array[Double])]],
-                       m: Int, subDim: Int, k: Int,
-                       centsQ: Option[Array[(Int, Array[Double])]] = None)
-      : DataFrame = {
-    // ONE fused codegen expression for the whole candidate score
-    // (graft.functions.AdcScore — the CellTopK pattern): with a cell
-    // term (residual encoding) the fold starts from the
-    // query·centroid dot — ((cd + d0) + d1)…, exactly the twin's
-    // list_prepend(cd, …) left fold; parity with the previous
-    // slice/element_at/double_dot stack is bit-exact (spec-pinned)
-    val codeCols = (0 until m).map(s => col(s"c$s"))
-    val scoreCol = centsQ match {
-      case Some(cq) => graft.functions.AdcScore.scoreWithCell(
-        col("qe"), col("cell"), codeCols, books, cq, subDim, 1.0e12)
-      case None => graft.functions.AdcScore.score(
-        col("qe"), codeCols, books, subDim, 1.0e12)
-    }
-    val scored = pairs.withColumn("pq_score", scoreCol)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("pq_score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"), col("pq_score"))
-  }
+  // ---- micro-unit training (exact, oracle-gateable) -----------------
 
   /** Per-subspace Lloyd training of the PQ codebooks on the
     * MICRO-UNIT grid — the oracle-gateable twin of
-    * [[trainPqCodebooks]]. [[trainPqCodebooks]]'s float `avg` is
-    * aggregation-order dependent (fine for a spec, fatal for a
-    * cross-engine hash gate); here the embeddings quantise to integer
-    * micro-units held in doubles, so every per-(s, code) component sum
-    * is EXACT under any partitioning and the trained codeword is the
-    * exact rational S/n — bit-identical in Spark and DuckDB
-    * ([[graft.llm.Clustering]]'s proven k-means recipe, applied per
-    * subspace). Empty codes keep their previous codeword.
-    *
-    * Scale: each iteration is ONE corpus scan — the m subvector codes
-    * are zero-shuffle literal argmaxes, the update is a single
-    * map-side-combined (s, code) aggregate with m·nCodes·(subDim+1)
-    * model-sized output collected to the driver.
+    * [[trainPqCodebooks]], whose float `avg` is aggregation-order
+    * dependent (fine for a spec, fatal for a cross-engine hash gate).
+    * Micro-unit vectors are integers held in doubles, so every per-(s,
+    * code) component sum is EXACT under any partitioning and the
+    * trained codeword is the exact rational S/n — bit-identical in
+    * Spark and DuckDB ([[graft.llm.Clustering]]'s k-means recipe,
+    * applied per subspace).
     */
   def pqTrainedCodebooks(emb: DataFrame, nCodes: Int = 16, m: Int = 8,
                          iters: Int = 2, dim: Int = 64)
       : Array[Array[(Int, Array[Double])]] = {
     // Clustering.train's pattern: training is fully materialised
-    // inside this call (seeds + one aggregate per iteration), so the
-    // quantised corpus caches for its duration and unpersists before
-    // return — the session CacheManager stays empty for the caller
+    // inside this call, so the quantised corpus caches for its
+    // duration and unpersists before return — the session
+    // CacheManager stays empty for the caller
     val embq = quantised(emb).cache()
     try pqTrainedCodebooksQ(embq, nCodes, m, iters, dim)
     finally embq.unpersist(false)
   }
 
   /** [[pqTrainedCodebooks]] over an ALREADY-quantised `(vec_id, qv)`
-    * frame, leaving materialisation policy to the caller — the seam
-    * that lets [[IvfPqTrainedModel.train]] share ONE quantised frame
-    * between its two concurrent trainings instead of double-caching
-    * the same canonical plan from two threads.
+    * frame, leaving materialisation policy to the caller (so
+    * [[IvfPqModel.train]] shares one quantised frame between its two
+    * concurrent trainings).
     */
   private[llm] def pqTrainedCodebooksQ(embq: DataFrame, nCodes: Int,
                                        m: Int, iters: Int, dim: Int)
       : Array[Array[(Int, Array[Double])]] = {
     graft.functions.DoubleVecDot.register(embq.sparkSession)
-    val subDim = dim / m
-    require(subDim * m == dim, s"dim $dim not divisible by m $m")
-    val seeds = embq.where(col("vec_id") < nCodes)
-      .select(col("vec_id").cast("int"), col("qv"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(seeds.map(_._1).toSeq == (0 until nCodes),
-      s"pqTrainedCodebooks: seed vec_ids must be exactly " +
-        s"0..${nCodes - 1}, got " + seeds.map(_._1).mkString(","))
-    seeds.foreach { case (cid, v) =>
-      require(v.length == dim,
-        s"pqTrainedCodebooks: dim=$dim but vector $cid has ${v.length}")
-    }
-    val books: Array[Array[(Int, Array[Double])]] = Array.tabulate(m)(
-      s => seeds.map { case (cid, v) =>
-        (cid, v.slice(s * subDim, (s + 1) * subDim))
+    lloydSubspaceBooks(embq, "qv", seedBooks(
+      seedRows[Double](embq, "qv", nCodes), nCodes, m, dim,
+      "pqTrainedCodebooks"), iters)
+  }
+
+  /** The per-subspace Lloyd loop shared by raw micro vectors and
+    * residual vectors: each iteration is ONE scan of `frame` — the m
+    * subvector codes are zero-shuffle literal argmaxes over the
+    * current books, the update one map-side-combined (s, code)
+    * aggregate of exact integer sums, model-sized output collected to
+    * the driver. Empty codes keep their previous codeword.
+    */
+  private def lloydSubspaceBooks(frame: DataFrame, vcol: String,
+      books0: Array[Array[(Int, Array[Double])]],
+      iters: Int): Array[Array[(Int, Array[Double])]] = {
+    val m = books0.length
+    val subDim = books0.head.head._2.length
+    var books = books0
+    for (_ <- 0 until iters) {
+      val stacked = frame.select(explode(array((0 until m).map(s =>
+        struct(lit(s).as("s"),
+          winner(graft.functions.CellTopK.rankD(col(vcol), books(s),
+            MicroScale, nTop = 1, offset = s * subDim)).as("code"),
+          slice(col(vcol), s * subDim + 1, subDim).as("sv"))
+      ): _*)).as("x"))
+        .select(col("x.s"), col("x.code"), col("x.sv"))
+      val aggs = count(lit(1)).as("n") +: (0 until subDim).map(i =>
+        sum(element_at(col("sv"), i + 1)).as(s"s$i"))
+      val means = stacked.groupBy("s", "code")
+        .agg(aggs.head, aggs.tail: _*)
+        .collect()
+        .map { r =>
+          val n = r.getLong(2).toDouble
+          (r.getInt(0), r.getInt(1)) ->
+            Array.tabulate(subDim)(i => r.getDouble(i + 3) / n)
+        }
+        .toMap
+      books = Array.tabulate(m)(s => books(s).map { case (cid, old) =>
+        (cid, means.getOrElse((s, cid), old))
       })
-    lloydSubspaceBooks(embq, "qv", books, m, subDim, iters)
+    }
+    books
+  }
+
+  /** q_sim11, the production PQ path — train → encode → ADC — as ONE
+    * oracle-gateable operator: Lloyd-trained micro-unit codebooks
+    * ([[pqTrainedCodebooks]]) served by the un-pruned ADC scan. The
+    * DuckDB twin re-derives the trained codebooks from the same seed
+    * rule with the iterations unrolled
+    * (graft.oracle.LlmOracles.sim11PqTrained).
+    */
+  def pqTrainedTopK(emb: DataFrame, nCodes: Int = 16, m: Int = 8,
+                    iters: Int = 2, nQueries: Int = 8, k: Int = 5,
+                    dim: Int = 64,
+                    fixtureScale: Boolean = false): DataFrame = {
+    Clustering.requireScaledK("pqTrainedTopK", nCodes, fixtureScale)
+    adcScan(emb, IvfPqModel(Array.empty,
+      pqTrainedCodebooks(emb, nCodes, m, iters, dim), micro = true),
+      nQueries, k)
   }
 
   /** Run two INDEPENDENT model trainings concurrently from driver
@@ -735,10 +906,9 @@ object Similarity {
     try {
       val fa = Future(a)
       val fb = Future(b)
-      // fail-FAST completion (ADVICE r21): either side's failure
-      // resolves the awaited promise immediately — the old
-      // Await(fa) → Await(fb) sequence sat on a hung first training
-      // while the second had already failed
+      // fail-FAST completion: either side's failure resolves the
+      // awaited promise immediately, instead of sitting on a hung
+      // first training while the second has already failed
       val p = Promise[(A, B)]()
       fa.onComplete { case Failure(e) => p.tryFailure(e); case _ => }
       fb.onComplete { case Failure(e) => p.tryFailure(e); case _ => }
@@ -772,191 +942,6 @@ object Similarity {
     } finally pool.shutdown()
   }
 
-  /** The per-subspace Lloyd loop shared by [[pqTrainedCodebooks]]
-    * (raw micro vectors) and [[IvfPqResidualModel]] (residual
-    * vectors): each iteration is ONE scan of `frame` — the m
-    * subvector codes are zero-shuffle literal argmaxes over the
-    * current books, the update one map-side-combined (s, code)
-    * aggregate of exact integer sums, model-sized output collected
-    * to the driver. Empty codes keep their previous codeword.
-    */
-  private def lloydSubspaceBooks(frame: DataFrame, vcol: String,
-      books0: Array[Array[(Int, Array[Double])]], m: Int, subDim: Int,
-      iters: Int): Array[Array[(Int, Array[Double])]] = {
-    var books = books0
-    for (_ <- 0 until iters) {
-      val stacked = frame.select(explode(array((0 until m).map(s =>
-        struct(lit(s).as("s"),
-          pqCodeExprD(books(s), col(vcol),
-            offset = s * subDim).as("code"),
-          slice(col(vcol), s * subDim + 1, subDim).as("sv"))
-      ): _*)).as("x"))
-        .select(col("x.s"), col("x.code"), col("x.sv"))
-      val aggs = count(lit(1)).as("n") +: (0 until subDim).map(i =>
-        sum(element_at(col("sv"), i + 1)).as(s"s$i"))
-      val means = stacked.groupBy("s", "code")
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map { r =>
-          val n = r.getLong(2).toDouble
-          (r.getInt(0), r.getInt(1)) ->
-            Array.tabulate(subDim)(i => r.getDouble(i + 3) / n)
-        }
-        .toMap
-      books = Array.tabulate(m)(s => books(s).map { case (cid, old) =>
-        (cid, means.getOrElse((s, cid), old))
-      })
-    }
-    books
-  }
-
-  /** The full production PQ path — train → encode → ADC search — as
-    * ONE oracle-gateable operator: Lloyd-trained micro-unit codebooks
-    * ([[pqTrainedCodebooks]]), zero-shuffle code projection, and
-    * asymmetric-distance scoring where the candidate's embedding is
-    * never touched (the per-subspace query·codeword dots come from the
-    * literal trained codebooks, summed s = 0..m−1 left-to-right and
-    * rescaled to cosine units). The DuckDB twin re-derives the trained
-    * codebooks from the same seed rule with the iterations unrolled
-    * (graft.oracle.LlmOracles.sim11PqTrained).
-    */
-  def pqTrainedTopK(emb: DataFrame, nCodes: Int = 16, m: Int = 8,
-                    iters: Int = 2, nQueries: Int = 8, k: Int = 5,
-                    dim: Int = 64,
-                    fixtureScale: Boolean = false): DataFrame = {
-    Clustering.requireScaledK("pqTrainedTopK", nCodes, fixtureScale)
-    graft.functions.DoubleVecDot.register(emb.sparkSession)
-    val subDim = dim / m
-    val books = pqTrainedCodebooks(emb, nCodes, m, iters, dim)
-    val embq = quantised(emb)
-    val coded = embq.select(col("vec_id") +: (0 until m).map(s =>
-      pqCodeExprD(books(s), col("qv"),
-        offset = s * subDim).as(s"c$s")): _*)
-    val q = broadcast(embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe")))
-    adcTopKD(coded.join(q, col("vec_id") =!= col("qid")),
-      books, m, subDim, k)
-  }
-
-  /** The COMPLETE production serving path with BOTH quantisers
-    * trained — q_sim12: exact micro-unit k-means coarse centroids
-    * ([[graft.llm.Clustering.train]]), exact per-subspace Lloyd
-    * codebooks ([[pqTrainedCodebooks]]), zero-shuffle cell + code
-    * projection, candidates pruned to each query's `nProbe` best
-    * trained cells, ADC over the pruned pairs from the literal
-    * trained codebooks. Same scale shape as [[ivfPqSearch]] (the
-    * corpus-resident row is (cell, m codes); the only exchange is the
-    * cell-keyed candidate join with the probe side broadcast) — but
-    * every model component is Lloyd-trained AND the DuckDB twin
-    * re-derives both trainings with the iterations unrolled, so the
-    * end-to-end train → index → prune → ADC path is hash-gated.
-    */
-  /** Model state of the FULLY-trained index: exact micro-unit k-means
-    * centroids + exact Lloyd PQ codebooks (the double/micro world,
-    * hash-gateable end-to-end; [[IvfPqModel]] is the float sibling).
-    */
-  final case class IvfPqTrainedModel(
-      cents: Array[(Int, Array[Double])],
-      books: Array[Array[(Int, Array[Double])]])
-
-  object IvfPqTrainedModel {
-    /** The coarse-centroid and PQ-codebook trainings are INDEPENDENT
-      * (both read only the quantised corpus), so they run
-      * concurrently ([[inParallel]]) over ONE shared lazily-
-      * checkpointed quantised frame — plan-private (never the session
-      * CacheManager), materialised once, reclaimed when unreachable.
-      * Identical models to the sequential form.
-      */
-    def train(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
-              m: Int = 8, iters: Int = 2,
-              dim: Int = 64): IvfPqTrainedModel = {
-      graft.functions.DoubleVecDot.register(emb.sparkSession)
-      // checkpoint-block lifetime (ADVICE r21): the lazy localCheckpoint
-      // blocks are reclaimed by the ContextCleaner once `embq` becomes
-      // unreachable — i.e. when this call returns (nothing retains the
-      // frame; the returned model is plain driver arrays). That is the
-      // designed policy, not a leak: an explicit release would need an
-      // eager checkpoint (a corpus-scale job at construction time even
-      // when the trainings' own first jobs could fold it in) or a
-      // fragile reach-around into the materialised RDD. Bounded by the
-      // quantised-corpus size per in-flight training, zero on return;
-      // never registered in the session CacheManager (the bench
-      // asserts that after every gate).
-      val embq = quantised(emb).localCheckpoint(eager = false)
-      val (cents, books) = inParallel(
-        Clustering.trainQ(embq, nCentroids, iters, dim),
-        pqTrainedCodebooksQ(embq, nCodes, m, iters, dim))
-      IvfPqTrainedModel(cents, books)
-    }
-  }
-
-  /** Corpus-resident index frame for the trained model: `(vec_id,
-    * cell, c0..c{m-1})` as one zero-shuffle projection over the
-    * micro-unit corpus — persist `partitionBy("cell")` and
-    * [[ivfPqTrainedSearch]]'s static prune becomes a partition-pruned
-    * read, exactly the [[ivfPqIndex]] serving layout with the trained
-    * quantisers.
-    */
-  def ivfPqTrainedIndex(emb: DataFrame, model: IvfPqTrainedModel,
-                        m: Int = 8, dim: Int = 64): DataFrame = {
-    graft.functions.DoubleVecDot.register(emb.sparkSession)
-    val subDim = dim / m
-    require(subDim * m == dim, s"dim $dim not divisible by m $m")
-    quantised(emb).select(
-      col("vec_id") +:
-        pqCodeExprD(model.cents, col("qv")).as("cell") +:
-        (0 until m).map(s =>
-          pqCodeExprD(model.books(s), col("qv"),
-            offset = s * subDim).as(s"c$s")): _*)
-  }
-
-  /** ADC search over a prebuilt [[ivfPqTrainedIndex]] frame.
-    * `queries` is a model-sized `(qid, qe)` frame with qe in
-    * MICRO-UNITS (the [[quantised]] projection). Same static-prune
-    * contract as [[ivfPqSearch]].
-    */
-  def ivfPqTrainedSearch(index: DataFrame, queries: DataFrame,
-                         model: IvfPqTrainedModel, nProbe: Int = 2,
-                         k: Int = 5, m: Int = 8, dim: Int = 64,
-                         staticPrune: Boolean = false): DataFrame = {
-    graft.functions.DoubleVecDot.register(index.sparkSession)
-    val subDim = dim / m
-    val probes = broadcast(queries
-      .withColumn("cell",
-        explode(cellSortD(model.cents, col("qe"), nTop = nProbe)
-          .getField("cid")))
-      .select(col("qid"), col("qe"), col("cell")))
-    val pruned =
-      if (!staticPrune) index
-      else {
-        val cells = probes.select("cell").distinct().collect()
-          .map(_.getInt(0))
-        index.where(col("cell").isin(cells.toIndexedSeq: _*))
-      }
-    // one cell per vector + distinct probed cells per query ⇒ unique
-    // (qid, vec_id) pairs, no dedup stage
-    adcTopKD(probes.join(pruned, Seq("cell"))
-      .where(col("vec_id") =!= col("qid")),
-      model.books, m, subDim, k)
-  }
-
-  def ivfPqTrainedTopK(emb: DataFrame, nCentroids: Int = 16,
-                       nProbe: Int = 2, nCodes: Int = 16, m: Int = 8,
-                       iters: Int = 2, nQueries: Int = 8, k: Int = 5,
-                       dim: Int = 64,
-                       fixtureScale: Boolean = false): DataFrame = {
-    Clustering.requireScaledK("ivfPqTrainedTopK", nCentroids,
-      fixtureScale)
-    val model = IvfPqTrainedModel.train(emb, nCentroids, nCodes, m,
-      iters, dim)
-    val queries = quantised(emb).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    ivfPqTrainedSearch(ivfPqTrainedIndex(emb, model, m, dim), queries,
-      model, nProbe, k, m, dim)
-  }
-
-  // ---- residual-encoded IVF-PQ (q_sim13) ---------------------------
-
   /** Twin of DuckDB's integer-snap `round(x)` for driver-held model
     * state: half away from zero on doubles. Measured in DuckDB at
     * micro-unit magnitudes, on negative ties, inside `list_transform`
@@ -987,240 +972,9 @@ object Similarity {
     if (x < 0) -r else r
   }
 
-  /** Model state of the RESIDUAL-encoded IVF-PQ index — the canonical
-    * IVF-ADC form (Jégou, Douze & Schmid, "Product quantization for
-    * nearest neighbor search", TPAMI 2011): PQ codes quantise the
-    * residual x − centroid(cell(x)) instead of the raw vector, so the
-    * codebooks spend their 8-byte budget on the WITHIN-cell geometry
-    * the coarse quantiser already localised — materially better
-    * recall at the same code size (the q_sim8 matrix measures it).
-    *
-    * Hash-gate exactness: residuals must stay on the integer micro
-    * grid or the Lloyd sums become partition-order dependent. The
-    * trained centroid components are exact rationals S/n — NOT
-    * integers — so the residual is taken against [[centsQ]], the
-    * centroid snapped to the micro grid with SQL-round semantics
-    * ([[qround]]); the ≤0.5-micro-unit (5·10⁻⁷ cosine) snap error is
-    * orders below the PQ quantisation error it exists to measure,
-    * and both engines re-derive the same snapped grid. Cell
-    * ASSIGNMENT and probing still use the full-precision [[cents]].
-    */
-  final case class IvfPqResidualModel(
-      cents: Array[(Int, Array[Double])],
-      centsQ: Array[(Int, Array[Double])],
-      books: Array[Array[(Int, Array[Double])]])
+  // ---- index maintenance: staleness, repair, trigger (q_sim16-19) ---
 
-  object IvfPqResidualModel {
-    def train(emb: DataFrame, nCentroids: Int = 16, nCodes: Int = 16,
-              m: Int = 8, iters: Int = 2,
-              dim: Int = 64): IvfPqResidualModel =
-      fromCentroids(Clustering.train(emb, nCentroids, iters, dim),
-        emb, nCodes, m, iters, dim)
-
-    /** Train the residual codebooks against an EXISTING coarse
-      * quantiser (shared with the raw-vector trained index — the
-      * q_sim8 matrix trains the centroids once and serves both rows).
-      */
-    def fromCentroids(cents: Array[(Int, Array[Double])],
-                      emb: DataFrame, nCodes: Int = 16, m: Int = 8,
-                      iters: Int = 2,
-                      dim: Int = 64): IvfPqResidualModel = {
-      graft.functions.DoubleVecDot.register(emb.sparkSession)
-      val subDim = dim / m
-      require(subDim * m == dim, s"dim $dim not divisible by m $m")
-      // residuals index the snapped-centroid literal by cell id
-      require(cents.map(_._1).toSeq == (0 until cents.length),
-        "IvfPqResidualModel: centroid cids must be exactly " +
-          s"0..${cents.length - 1}, got " + cents.map(_._1).mkString(","))
-      val centsQ = cents.map { case (cid, v) => (cid, v.map(qround)) }
-      // residual corpus: one zero-shuffle projection (literal-argmax
-      // cell + element-wise integer subtraction); cached for the
-      // bounded training loop, unpersisted before return
-      // (CacheManager-free for the caller, Clustering.train's pattern)
-      val resid = residualFrame(quantised(emb), cents, centsQ)
-        .select("vec_id", "rv").cache()
-      try {
-        val seeds = resid.where(col("vec_id") < nCodes)
-          .select(col("vec_id").cast("int"), col("rv"))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        require(seeds.map(_._1).toSeq == (0 until nCodes),
-          "IvfPqResidualModel: seed vec_ids must be exactly " +
-            s"0..${nCodes - 1}, got " + seeds.map(_._1).mkString(","))
-        val books0 = Array.tabulate(m)(s => seeds.map { case (cid, v) =>
-          (cid, v.slice(s * subDim, (s + 1) * subDim))
-        })
-        IvfPqResidualModel(cents, centsQ,
-          lloydSubspaceBooks(resid, "rv", books0, m, subDim, iters))
-      } finally resid.unpersist(false)
-    }
-  }
-
-  /** (vec_id, qv, cell, rv): trained-cell assignment (full-precision
-    * literal argmax) + exact integer residual vs the snapped centroid.
-    * Pure projection — zero exchanges.
-    */
-  private def residualFrame(embq: DataFrame,
-                            cents: Array[(Int, Array[Double])],
-                            centsQ: Array[(Int, Array[Double])])
-      : DataFrame = {
-    val cqLit = typedLit(centsQ.map(_._2.toSeq).toSeq)
-    embq
-      .withColumn("cell", pqCodeExprD(cents, col("qv")))
-      .withColumn("rv", zip_with(col("qv"),
-        element_at(cqLit, col("cell") + 1), (a, b) => a - b))
-  }
-
-  /** Corpus-resident residual index frame: `(vec_id, cell,
-    * c0..c{m-1})` with the codes quantising the RESIDUAL — same
-    * serving layout as [[ivfPqTrainedIndex]] (persist
-    * `partitionBy("cell")` for partition-pruned probes), one
-    * zero-shuffle projection.
-    */
-  def ivfPqResidualIndex(emb: DataFrame, model: IvfPqResidualModel,
-                         m: Int = 8, dim: Int = 64): DataFrame = {
-    graft.functions.DoubleVecDot.register(emb.sparkSession)
-    val subDim = dim / m
-    require(subDim * m == dim, s"dim $dim not divisible by m $m")
-    residualFrame(quantised(emb), model.cents, model.centsQ).select(
-      col("vec_id") +: col("cell") +: (0 until m).map(s =>
-        pqCodeExprD(model.books(s), col("rv"),
-          offset = s * subDim).as(s"c$s")): _*)
-  }
-
-  /** ADC search over a prebuilt [[ivfPqResidualIndex]]. The candidate
-    * score reconstructs dot(q, x̂) = dot(q, centroid(cell)) +
-    * Σ_s dot(q_s, codeword_s) — the per-cell query·centroid term is
-    * the "ADC table depends on the probed cell" part of canonical
-    * IVF-ADC, and it broadcasts (nProbe × nQueries dots, computed
-    * inline from the literal snapped centroids). Same static-prune
-    * contract as [[ivfPqTrainedSearch]].
-    */
-  def ivfPqResidualSearch(index: DataFrame, queries: DataFrame,
-                          model: IvfPqResidualModel, nProbe: Int = 2,
-                          k: Int = 5, m: Int = 8, dim: Int = 64,
-                          staticPrune: Boolean = false): DataFrame = {
-    graft.functions.DoubleVecDot.register(index.sparkSession)
-    val subDim = dim / m
-    val probes = broadcast(queries
-      .withColumn("cell",
-        explode(cellSortD(model.cents, col("qe"), nTop = nProbe)
-          .getField("cid")))
-      .select(col("qid"), col("qe"), col("cell")))
-    val pruned =
-      if (!staticPrune) index
-      else {
-        val cells = probes.select("cell").distinct().collect()
-          .map(_.getInt(0))
-        index.where(col("cell").isin(cells.toIndexedSeq: _*))
-      }
-    adcTopKD(probes.join(pruned, Seq("cell"))
-      .where(col("vec_id") =!= col("qid")),
-      model.books, m, subDim, k, Some(model.centsQ))
-  }
-
-  def ivfPqResidualTopK(emb: DataFrame, nCentroids: Int = 16,
-                        nProbe: Int = 2, nCodes: Int = 16, m: Int = 8,
-                        iters: Int = 2, nQueries: Int = 8, k: Int = 5,
-                        dim: Int = 64,
-                        fixtureScale: Boolean = false): DataFrame = {
-    Clustering.requireScaledK("ivfPqResidualTopK", nCentroids,
-      fixtureScale)
-    val model = IvfPqResidualModel.train(emb, nCentroids, nCodes, m,
-      iters, dim)
-    val queries = quantised(emb).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    ivfPqResidualSearch(ivfPqResidualIndex(emb, model, m, dim),
-      queries, model, nProbe, k, m, dim)
-  }
-
-  // ---- exact re-rank serving stage (q_sim14) -----------------------
-
-  /** Production ANN's last stage: ADC top-`r` candidates, re-ranked
-    * by EXACT cosine. The ADC pass reads only codes; the exact pass
-    * broadcast-joins the r·nQueries candidate ids back to the corpus
-    * by vec_id — one corpus scan filtered through a broadcast-hash
-    * join, every post-join frame candidate-sized — then one exact
-    * micro-unit dot per candidate and the per-query top-k window.
-    * Any ground-truth neighbour that reaches the candidate set is
-    * returned (a global top-k vector beats every non-truth candidate
-    * on exact cosine), so recall equals candidate coverage — the ADC
-    * ranking error the code budget causes is erased for the cost of
-    * r exact dots per query.
-    */
-  def ivfPqRerankSearch(index: DataFrame, corpusQ: DataFrame,
-                        queries: DataFrame, model: IvfPqTrainedModel,
-                        nProbe: Int = 4, r: Int = 40, k: Int = 5,
-                        m: Int = 8, dim: Int = 64): DataFrame =
-    exactRerankTail(
-      ivfPqTrainedSearch(index, queries, model, nProbe, r, m, dim)
-        .select(col("qid"), col("vec_id")),
-      corpusQ, queries, k)
-
-  /** The exact stage shared by both rerank paths: candidate ids
-    * broadcast back onto the corpus scan, one exact micro-unit cosine
-    * per candidate, per-query top-k window — every post-join frame is
-    * candidate-sized.
-    */
-  private def exactRerankTail(cand: DataFrame, corpusQ: DataFrame,
-                              queries: DataFrame, k: Int): DataFrame = {
-    val qn = queries.withColumn("qn",
-      sqrt(call_function("double_dot", col("qe"), col("qe"))))
-    val scored = corpusQ
-      .join(broadcast(cand), "vec_id")
-      .join(broadcast(qn), "qid")
-      .withColumn("cos_sim", round(
-        call_function("double_dot", col("qe"), col("qv"))
-          / (col("qn")
-            * sqrt(call_function("double_dot", col("qv"), col("qv")))),
-        6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"), col("cos_sim"))
-  }
-
-  /** The COMPLETE canonical serving stack (FAISS's IVFPQ+refine
-    * shape): residual-encoded index → per-cell ADC top-R → exact
-    * re-rank to top-k. Composes [[ivfPqResidualSearch]]'s pruned ADC
-    * pass with the shared exact tail — both quantisation error
-    * sources (cell prune aside) are erased for r exact dots/query.
-    */
-  def ivfPqResidualRerankSearch(index: DataFrame, corpusQ: DataFrame,
-                                queries: DataFrame,
-                                model: IvfPqResidualModel,
-                                nProbe: Int = 8, r: Int = 160,
-                                k: Int = 5, m: Int = 8,
-                                dim: Int = 64): DataFrame =
-    exactRerankTail(
-      ivfPqResidualSearch(index, queries, model, nProbe, r, m, dim)
-        .select(col("qid"), col("vec_id")),
-      corpusQ, queries, k)
-
-  def ivfPqResidualRerankTopK(emb: DataFrame, nCentroids: Int = 16,
-                              nProbe: Int = 8, nCodes: Int = 16,
-                              m: Int = 8, iters: Int = 2,
-                              nQueries: Int = 8, r: Int = 160,
-                              k: Int = 5, dim: Int = 64,
-                              fixtureScale: Boolean = false)
-      : DataFrame = {
-    Clustering.requireScaledK("ivfPqResidualRerankTopK", nCentroids,
-      fixtureScale)
-    graft.functions.DoubleVecDot.register(emb.sparkSession)
-    val model = IvfPqResidualModel.train(emb, nCentroids, nCodes, m,
-      iters, dim)
-    val embq = quantised(emb)
-    val queries = embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    ivfPqResidualRerankSearch(ivfPqResidualIndex(emb, model, m, dim),
-      embq, queries, model, nProbe, r, k, m, dim)
-  }
-
-  // ---- index staleness / retrain trigger (q_sim16) ------------------
-
-  /** Default old-corpus cutoff for [[indexStalenessReport]]: vectors
+  /** Default old-corpus cutoff for the maintenance reports: vectors
     * with vec_id below it are the "already indexed" corpus the stale
     * model trained on; the rest are post-training arrivals. 256 keeps
     * the centroid/codebook seed rules (vec_id < 16) inside the old
@@ -1228,205 +982,52 @@ object Similarity {
     */
   val StalenessOldCut = 256
 
-  /** The retrain-trigger statistic a 100 TB index needs: a trained
-    * [[IvfPqResidualModel]] goes STALE as the corpus grows — new
-    * arrivals are encoded against centroids and codebooks that never
-    * saw them, so per-cell occupancy skews and recall drifts below a
-    * fresh-trained model's. This report measures both, exactly:
-    *
-    * - one row per stale-model cell: `n_old` / `n_new` — old-corpus
-    *   vs post-training vectors assigned to the cell (occupancy skew:
-    *   growth concentrating in few cells is the classic retrain
-    *   signal, FAISS's IVF re-balance criterion);
-    * - on every row (summary columns): `stale_hits` / `fresh_hits` /
-    *   `truth_total` — exact ground-truth top-k hits of the ADC
-    *   serving path under the stale model vs a fresh-trained one,
-    *   summed over the query set. All counts are integers, so the
-    *   gate hashes bit-for-bit.
-    *
-    * Scale shape: two bounded trainings (iters-capped map-side-
-    * combined scans), two zero-shuffle index projections, searches
-    * over broadcast probes, and MODEL-sized joins for the hit counts
-    * (nQueries·k pairs). No corpus-scale shuffle anywhere.
+  /** Occupancy of the grown corpus per cell: a k-row collect — model
+    * state, never corpus-sized.
     */
-  def indexStalenessReport(emb: DataFrame, nCentroids: Int = 16,
-                           nProbe: Int = 2, nCodes: Int = 16,
-                           m: Int = 8, iters: Int = 2,
-                           nQueries: Int = 8, k: Int = 5,
-                           dim: Int = 64,
-                           oldCut: Int = StalenessOldCut,
-                           fixtureScale: Boolean = false): DataFrame = {
-    Clustering.requireScaledK("indexStalenessReport", nCentroids,
-      fixtureScale)
-    val s = emb.sparkSession
-    import s.implicits._
-    graft.functions.DoubleVecDot.register(s)
-    val embOld = emb.where(col("vec_id") < oldCut)
-    // stale and fresh trainings are independent (distinct input
-    // frames, so no shared cache entries) — run them concurrently
-    val (stale, fresh) = inParallel(
-      IvfPqResidualModel.train(embOld, nCentroids, nCodes, m, iters,
-        dim),
-      IvfPqResidualModel.train(emb, nCentroids, nCodes, m, iters, dim))
-    val embq = quantised(emb)
-    val queries = embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    def served(model: IvfPqResidualModel): DataFrame =
-      ivfPqResidualSearch(ivfPqResidualIndex(emb, model, m, dim),
-        queries, model, nProbe, k, m, dim)
-        .select("qid", "vec_id")
-    val truth = bruteForceTopK(emb, nQueries, k)
-      .select("qid", "vec_id")
-    def hits(pairs: DataFrame, name: String): DataFrame =
-      truth.join(pairs, Seq("qid", "vec_id"))
-        .agg(count(lit(1)).as(name))
-    // full-corpus assignment to the STALE cells, split old/new
-    val occCounts = embq
-      .withColumn("cell", pqCodeExprD(stale.cents, col("qv")))
-      .groupBy("cell").agg(
-        sum(when(col("vec_id") < oldCut, 1L).otherwise(0L))
-          .as("n_old_raw"),
-        sum(when(col("vec_id") >= oldCut, 1L).otherwise(0L))
-          .as("n_new_raw"))
-    val cells = (0 until nCentroids).map(_.toLong).toDF("cell")
-    cells
-      .join(occCounts, Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_old_raw"), lit(0L)).as("n_old"),
-        coalesce(col("n_new_raw"), lit(0L)).as("n_new"))
-      .crossJoin(broadcast(hits(served(stale), "stale_hits")))
-      .crossJoin(broadcast(hits(served(fresh), "fresh_hits")))
-      .crossJoin(broadcast(truth.agg(count(lit(1)).as("truth_total"))))
+  private def cellCounts(assigned: DataFrame): Map[Int, Long] =
+    assigned.groupBy("cell").agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+
+  /** Members-only 2-means of one cell: seeds = its two smallest member
+    * vec_ids, `iters` Lloyd rounds on the exact micro-unit arithmetic
+    * of [[graft.llm.Clustering]] over that cell's members only (the
+    * hot-cell fraction of the corpus, not the corpus).
+    */
+  private def splitCell(assigned: DataFrame, cid: Int, iters: Int,
+                        dim: Int): (Array[Double], Array[Double]) = {
+    val pool = assigned.where(col("cell") === cid)
+      .select("vec_id", "qv").cache()
+    try {
+      val seeds = pool.orderBy("vec_id").limit(2).collect()
+        .map(_.getSeq[Double](1).toArray)
+      require(seeds.length == 2, s"hot cell $cid has < 2 members")
+      val sub = (0 until iters).foldLeft(
+        Array((0, seeds(0)), (1, seeds(1)))) { (cs, _) =>
+        Clustering.lloydStep(pool, cs, dim)
+      }
+      (sub(0)._2, sub(1)._2)
+    } finally pool.unpersist(false)
   }
 
-  // ---- incremental index maintenance (q_sim17) -----------------------
-
   /** Split the single hottest cell of `cents` (occupancy of the GROWN
-    * corpus, max count, tie → min cid) into two sub-centroids via a
-    * deterministic 2-means over that cell's members only (seeds = the
-    * two smallest member vec_ids, `iters` Lloyd rounds on the same
-    * exact micro-unit arithmetic as [[graft.llm.Clustering]]).
-    * Returns the rebalanced centroid set: the hot cid keeps
-    * sub-centroid 0, sub-centroid 1 appends as cid = |cents| — cids
-    * stay dense 0..k, so the residual machinery applies unchanged.
-    *
-    * Scale shape: one occupancy aggregate (k rows collected — model
-    * state), `iters` Lloyd passes over ONE cell's members (the
-    * hot-cell fraction of the corpus, not the corpus), zero new
-    * corpus-scale shuffles.
+    * corpus, max count, tie → min cid) into two sub-centroids
+    * ([[splitCell]]). Returns the rebalanced centroid set and the hot
+    * cid: the hot cid keeps sub-centroid 0, sub-centroid 1 appends as
+    * cid = |cents| — cids stay dense 0..k, so the residual machinery
+    * applies unchanged. Scale: one occupancy aggregate, `iters` Lloyd
+    * passes over ONE cell's members, zero corpus-scale shuffles.
     */
   def rebalanceHotCell(embq: DataFrame,
                        cents: Array[(Int, Array[Double])],
                        iters: Int, dim: Int)
       : (Array[(Int, Array[Double])], Int) = {
-    val assigned = embq
-      .withColumn("cell", pqCodeExprD(cents, col("qv")))
-    val occ = assigned.groupBy("cell")
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val hotCid = cents.map(_._1)
-      .maxBy(c => (occ.getOrElse(c, 0L), -c.toLong))
-    val pool = assigned.where(col("cell") === hotCid)
-      .select("vec_id", "qv").cache()
-    try {
-      val seeds = pool.orderBy("vec_id").limit(2).collect()
-        .map(_.getSeq[Double](1).toArray)
-      require(seeds.length == 2,
-        s"rebalanceHotCell: hot cell $hotCid has < 2 members")
-      var sub: Array[(Int, Array[Double])] =
-        Array((0, seeds(0)), (1, seeds(1)))
-      for (_ <- 0 until iters)
-        sub = Clustering.lloydStep(pool, sub, dim)
-      val rebal = cents.map { case (cid, v) =>
-        if (cid == hotCid) (cid, sub(0)._2) else (cid, v)
-      } :+ (cents.length, sub(1)._2)
-      (rebal, hotCid)
-    } finally pool.unpersist(false)
-  }
-
-  /** The REPAIR step the staleness report (q_sim16) calls for — both
-    * maintenance operations a 100 TB index runs between full
-    * retrains:
-    *
-    *  - INCREMENTAL RE-ENCODE: post-training arrivals are encoded
-    *    into the EXISTING stale model and unioned with the old index
-    *    (the index projection is row-local, so the incremental build
-    *    is EXACTLY the from-scratch encode under the same model —
-    *    this gate serves the stale leg from the incrementally-built
-    *    index, so any divergence would break the hash);
-    *  - CELL REBALANCE ([[rebalanceHotCell]]): the hottest cell of
-    *    the grown corpus splits into two retrained sub-centroids
-    *    (members-only 2-means); residual codebooks retrain against
-    *    the rebalanced cells on the OLD corpus only — the whole
-    *    repair never runs corpus-scale training.
-    *
-    * Output (all BIGINT, hash-gated): one row per rebalanced cell
-    * (0..k) with `n_before` / `n_after` occupancy of the grown corpus
-    * under the stale vs rebalanced coarse quantiser, plus summary
-    * columns `stale_hits` / `rebal_hits` / `fresh_hits` /
-    * `truth_total` — exact ground-truth top-k hits of the three
-    * serving paths. The SimilaritySpec pins the recall ordering
-    * stale ≤ rebalanced ≤ fresh.
-    */
-  def indexRebalanceReport(emb: DataFrame, nCentroids: Int = 16,
-                           nProbe: Int = 2, nCodes: Int = 16,
-                           m: Int = 8, iters: Int = 2,
-                           nQueries: Int = 8, k: Int = 5,
-                           dim: Int = 64,
-                           oldCut: Int = StalenessOldCut,
-                           fixtureScale: Boolean = false): DataFrame = {
-    Clustering.requireScaledK("indexRebalanceReport", nCentroids,
-      fixtureScale)
-    val s = emb.sparkSession
-    import s.implicits._
-    graft.functions.DoubleVecDot.register(s)
-    val embOld = emb.where(col("vec_id") < oldCut)
-    val embNew = emb.where(col("vec_id") >= oldCut)
-    // stale and fresh trainings are independent — run concurrently
-    // (the rebalance chain below still needs stale first)
-    val (stale, fresh) = inParallel(
-      IvfPqResidualModel.train(embOld, nCentroids, nCodes, m, iters,
-        dim),
-      IvfPqResidualModel.train(emb, nCentroids, nCodes, m, iters, dim))
-    val embq = quantised(emb)
-    val (rebalCents, _) = rebalanceHotCell(embq, stale.cents, iters,
-      dim)
-    val rebal = IvfPqResidualModel.fromCentroids(rebalCents, embOld,
-      nCodes, m, iters, dim)
-    val queries = embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    // the stale leg serves from the INCREMENTALLY-maintained index:
-    // old-corpus encode ∪ new-arrivals encode under the same model
-    val staleIdx = ivfPqResidualIndex(embOld, stale, m, dim)
-      .unionAll(ivfPqResidualIndex(embNew, stale, m, dim))
-    def served(idx: DataFrame, model: IvfPqResidualModel): DataFrame =
-      ivfPqResidualSearch(idx, queries, model, nProbe, k, m, dim)
-        .select("qid", "vec_id")
-    val truth = bruteForceTopK(emb, nQueries, k)
-      .select("qid", "vec_id")
-    def hits(pairs: DataFrame, name: String): DataFrame =
-      truth.join(pairs, Seq("qid", "vec_id"))
-        .agg(count(lit(1)).as(name))
-    def occ(cents: Array[(Int, Array[Double])],
-            name: String): DataFrame =
-      embq.withColumn("cell", pqCodeExprD(cents, col("qv")))
-        .groupBy("cell").agg(count(lit(1)).as(name))
-        .select(col("cell").cast("long").as("cell"), col(name))
-    val cells = (0 to nCentroids).map(_.toLong).toDF("cell")
-    cells
-      .join(occ(stale.cents, "n_before_raw"), Seq("cell"), "left")
-      .join(occ(rebalCents, "n_after_raw"), Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_before_raw"), lit(0L)).as("n_before"),
-        coalesce(col("n_after_raw"), lit(0L)).as("n_after"))
-      .crossJoin(broadcast(hits(served(staleIdx, stale), "stale_hits")))
-      .crossJoin(broadcast(hits(
-        served(ivfPqResidualIndex(emb, rebal, m, dim), rebal),
-        "rebal_hits")))
-      .crossJoin(broadcast(hits(
-        served(ivfPqResidualIndex(emb, fresh, m, dim), fresh),
-        "fresh_hits")))
-      .crossJoin(broadcast(truth.agg(count(lit(1)).as("truth_total"))))
+    val assigned = assign(embq, cents)
+    val occ = cellCounts(assigned)
+    val hot = cents.map(_._1).maxBy(c => (occ.getOrElse(c, 0L), -c.toLong))
+    val (sub0, sub1) = splitCell(assigned, hot, iters, dim)
+    (cents.map { case (cid, v) => (cid, if (cid == hot) sub0 else v) } :+
+      ((cents.length, sub1)), hot)
   }
 
   /** The next maintenance rung after [[rebalanceHotCell]]: repair the
@@ -1438,21 +1039,14 @@ object Similarity {
     * Deterministic policy, twin-reproducible from integer occupancy
     * counts alone:
     *  - hot set = top-`splits` cids by (count desc, cid asc); each
-    *    splits via the same members-only 2-means as
-    *    [[rebalanceHotCell]] (seeds = two smallest member vec_ids);
+    *    splits via [[splitCell]], concurrently (each reads only its
+    *    own cell's members);
     *  - cold set = bottom-`splits` cids by (count asc, cid asc),
     *    hot-disjoint; the i-th cold cid's centroid is REPLACED by the
-    *    i-th hot split's sub-centroid 1 (pairing by rank). The merge
-    *    is implicit: the deleted underfull centroid's members
-    *    re-assign to their nearest surviving centroid at the next
-    *    full assignment — no explicit nearest-merge pass needed, and
-    *    cids stay dense 0..k-1 so every downstream residual/serving
-    *    shape applies unchanged.
-    *
-    * Scale shape: one k-row occupancy collect (model state), `splits`
-    * bounded 2-means loops over single cells' members, zero
-    * corpus-scale shuffles — [[rebalanceHotCell]]'s budget times
-    * `splits`.
+    *    i-th hot split's sub-centroid 1. The merge is implicit: the
+    *    deleted underfull centroid's members re-assign to their
+    *    nearest surviving centroid at the next full assignment, and
+    *    cids stay dense 0..k-1.
     */
   def rebalanceCellsMerge(embq: DataFrame,
                           cents: Array[(Int, Array[Double])],
@@ -1460,62 +1054,176 @@ object Similarity {
       : (Array[(Int, Array[Double])], Seq[Int], Seq[Int]) = {
     require(splits >= 1 && 2 * splits <= cents.length,
       s"splits $splits needs 2*splits <= k=${cents.length}")
-    val assigned = embq
-      .withColumn("cell", pqCodeExprD(cents, col("qv")))
-      .localCheckpoint(eager = false)
-    val occ = assigned.groupBy("cell")
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    val assigned = assign(embq, cents).localCheckpoint(eager = false)
+    val occ = cellCounts(assigned)
     val hot = cents.map(_._1)
       .sortBy(c => (-occ.getOrElse(c, 0L), c.toLong)).take(splits).toSeq
     val cold = cents.map(_._1).filterNot(hot.contains)
       .sortBy(c => (occ.getOrElse(c, 0L), c.toLong)).take(splits).toSeq
     require(cold.length == splits,
       s"rebalanceCellsMerge: needs $splits hot-disjoint cold cells")
-    // the per-hot-cell 2-means loops are independent (each reads only
-    // its own cell's members) — run them concurrently from driver
-    // threads, same rationale as [[inParallel]]
-    def splitCell(hcid: Int): (Array[Double], Array[Double]) = {
-      val pool = assigned.where(col("cell") === hcid)
-        .select("vec_id", "qv").cache()
-      try {
-        val seeds = pool.orderBy("vec_id").limit(2).collect()
-          .map(_.getSeq[Double](1).toArray)
-        require(seeds.length == 2,
-          s"rebalanceCellsMerge: hot cell $hcid has < 2 members")
-        var sub: Array[(Int, Array[Double])] =
-          Array((0, seeds(0)), (1, seeds(1)))
-        for (_ <- 0 until iters)
-          sub = Clustering.lloydStep(pool, sub, dim)
-        (sub(0)._2, sub(1)._2)
-      } finally pool.unpersist(false)
-    }
-    val subPairs = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(splits.min(4))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try {
-        val fs = hot.map(h => Future(splitCell(h)))
-        fs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
-    }
+    val subs = inParallelAll(
+      hot.map(h => () => splitCell(assigned, h, iters, dim)))
     val repl: Map[Int, Array[Double]] =
-      hot.zip(subPairs.map(_._1)).toMap ++
-        cold.zip(subPairs.map(_._2)).toMap
+      hot.zip(subs.map(_._1)).toMap ++ cold.zip(subs.map(_._2)).toMap
     (cents.map { case (cid, v) => (cid, repl.getOrElse(cid, v)) },
       hot, cold)
   }
 
-  /** q_sim18: the multi-cell repair + merge report — occupancy of the
+  /** What every maintenance report shares: the grown corpus split at
+    * `oldCut`, its micro projection, the standing queries, the exact
+    * ground truth, and the trainings, occupancy legs and served-hit
+    * legs measured over them. Every count is an integer, so the gates
+    * hash bit-for-bit.
+    *
+    * Scale shape: bounded trainings (iters-capped map-side-combined
+    * scans), zero-shuffle index projections, searches over broadcast
+    * probes, and MODEL-sized joins for the hit counts (nQueries·k
+    * pairs). No corpus-scale shuffle anywhere.
+    */
+  private final class Maintenance(emb: DataFrame, nCentroids: Int,
+                                  nProbe: Int, nCodes: Int, m: Int,
+                                  iters: Int, nQueries: Int, k: Int,
+                                  dim: Int, oldCut: Int) {
+    private val spark = emb.sparkSession
+    import spark.implicits._
+    graft.functions.DoubleVecDot.register(spark)
+    val embOld: DataFrame = emb.where(col("vec_id") < oldCut)
+    val embq: DataFrame = quantised(emb)
+    private val queries = embq.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("qv").as("qe"))
+    private val truth = bruteForceTopK(emb, nQueries, k)
+      .select("qid", "vec_id")
+
+    def train(e: DataFrame): IvfPqModel =
+      IvfPqModel.residual(e, nCentroids, nCodes, m, iters, dim)
+
+    /** The stale (old-corpus) and fresh (grown-corpus) models; the
+      * trainings read distinct frames, so they run concurrently.
+      */
+    def staleAndFresh(): (IvfPqModel, IvfPqModel) =
+      inParallel(train(embOld), train(emb))
+
+    /** Residual books retrained on the OLD corpus against repaired
+      * cells — a repair never trains corpus-scale.
+      */
+    def retrain(cents: Array[(Int, Array[Double])]): IvfPqModel =
+      IvfPqModel.residualOn(cents, embOld, nCodes, m, iters, dim)
+
+    /** The stale model's INCREMENTALLY-maintained index: old-corpus
+      * encode ∪ post-training arrivals encoded under the same model.
+      */
+    def incremental(model: IvfPqModel): DataFrame =
+      ivfPqIndex(embOld, model)
+        .unionAll(ivfPqIndex(emb.where(col("vec_id") >= oldCut), model))
+
+    def fromScratch(model: IvfPqModel): (DataFrame, IvfPqModel) =
+      (ivfPqIndex(emb, model), model)
+
+    /** `<name>_raw` per-cell counts of the grown corpus under `cents`. */
+    def occ(cents: Array[(Int, Array[Double])], name: String): DataFrame =
+      assign(embq, cents).groupBy("cell").agg(count(lit(1)).as(s"${name}_raw"))
+        .select(col("cell").cast("long").as("cell"), col(s"${name}_raw"))
+
+    /** Dense cells 0 until `n`, each `<name>_raw` column of `occs`
+      * left-joined and reported as `name`, absent cells counted 0.
+      */
+    def perCell(n: Int, occs: DataFrame*)(names: String*): DataFrame =
+      occs.foldLeft((0 until n).map(_.toLong).toDF("cell"))(
+        _.join(_, Seq("cell"), "left"))
+        .select(col("cell") +: names.map(c =>
+          coalesce(col(s"${c}_raw"), lit(0L)).as(c)): _*)
+
+    /** `cells` with one broadcast summary column per served leg — exact
+      * ground-truth top-k hits of `ivfPqSearch(index, model)` — and
+      * `truth_total`.
+      */
+    def withHits(cells: DataFrame,
+                 legs: ((DataFrame, IvfPqModel), String)*): DataFrame =
+      legs.foldLeft(cells) { case (df, ((index, model), name)) =>
+        df.crossJoin(broadcast(truth.join(
+          ivfPqSearch(index, queries, model, nProbe, k)
+            .select("qid", "vec_id"), Seq("qid", "vec_id"))
+          .agg(count(lit(1)).as(name))))
+      }.crossJoin(broadcast(truth.agg(count(lit(1)).as("truth_total"))))
+  }
+
+  /** q_sim16, the retrain-trigger statistic: a trained residual model
+    * goes STALE as the corpus grows — arrivals are encoded against
+    * centroids and codebooks that never saw them, so per-cell
+    * occupancy skews and recall drifts below a fresh-trained model's.
+    *
+    *  - one row per stale-model cell: `n_old` / `n_new` — old-corpus
+    *    vs post-training vectors assigned to the cell (growth
+    *    concentrating in few cells is the classic retrain signal);
+    *  - summary columns `stale_hits` / `fresh_hits` / `truth_total` —
+    *    exact ground-truth top-k hits of the stale vs fresh serving
+    *    path, summed over the query set.
+    */
+  def indexStalenessReport(emb: DataFrame, nCentroids: Int = 16,
+                           nProbe: Int = 2, nCodes: Int = 16,
+                           m: Int = 8, iters: Int = 2,
+                           nQueries: Int = 8, k: Int = 5,
+                           dim: Int = 64,
+                           oldCut: Int = StalenessOldCut,
+                           fixtureScale: Boolean = false): DataFrame = {
+    Clustering.requireScaledK("indexStalenessReport", nCentroids,
+      fixtureScale)
+    val mt = new Maintenance(emb, nCentroids, nProbe, nCodes, m, iters,
+      nQueries, k, dim, oldCut)
+    val (stale, fresh) = mt.staleAndFresh()
+    val split = assign(mt.embq, stale.cents).groupBy("cell").agg(
+      sum(when(col("vec_id") < oldCut, 1L).otherwise(0L)).as("n_old_raw"),
+      sum(when(col("vec_id") >= oldCut, 1L).otherwise(0L)).as("n_new_raw"))
+    mt.withHits(mt.perCell(nCentroids, split)("n_old", "n_new"),
+      mt.fromScratch(stale) -> "stale_hits",
+      mt.fromScratch(fresh) -> "fresh_hits")
+  }
+
+  /** q_sim17, the REPAIR step the staleness report calls for — both
+    * maintenance operations a 100 TB index runs between full retrains:
+    *
+    *  - INCREMENTAL RE-ENCODE: the stale leg serves from the
+    *    incrementally-built index ([[Maintenance.incremental]]), so any
+    *    divergence from the from-scratch encode would break the hash;
+    *  - CELL REBALANCE ([[rebalanceHotCell]]): the hottest cell of the
+    *    grown corpus splits into two retrained sub-centroids; residual
+    *    codebooks retrain against the rebalanced cells on the OLD
+    *    corpus only.
+    *
+    * Output: one row per rebalanced cell (0..k) with `n_before` /
+    * `n_after` occupancy of the grown corpus under the stale vs
+    * rebalanced coarse quantiser, plus `stale_hits` / `rebal_hits` /
+    * `fresh_hits` / `truth_total`. SimilaritySpec pins the recall
+    * ordering stale ≤ rebalanced ≤ fresh.
+    */
+  def indexRebalanceReport(emb: DataFrame, nCentroids: Int = 16,
+                           nProbe: Int = 2, nCodes: Int = 16,
+                           m: Int = 8, iters: Int = 2,
+                           nQueries: Int = 8, k: Int = 5,
+                           dim: Int = 64,
+                           oldCut: Int = StalenessOldCut,
+                           fixtureScale: Boolean = false): DataFrame = {
+    Clustering.requireScaledK("indexRebalanceReport", nCentroids,
+      fixtureScale)
+    val mt = new Maintenance(emb, nCentroids, nProbe, nCodes, m, iters,
+      nQueries, k, dim, oldCut)
+    val (stale, fresh) = mt.staleAndFresh()
+    val (rebalCents, _) = rebalanceHotCell(mt.embq, stale.cents, iters,
+      dim)
+    mt.withHits(mt.perCell(nCentroids + 1, mt.occ(stale.cents, "n_before"),
+      mt.occ(rebalCents, "n_after"))("n_before", "n_after"),
+      (mt.incremental(stale), stale) -> "stale_hits",
+      mt.fromScratch(mt.retrain(rebalCents)) -> "rebal_hits",
+      mt.fromScratch(fresh) -> "fresh_hits")
+  }
+
+  /** q_sim18, the multi-cell repair + merge report: occupancy of the
     * grown corpus per cell (0..k-1, k CONSTANT — the bounded-k
-    * invariant is structural: the output has exactly k rows) under
-    * the stale vs multi-repaired coarse quantiser, plus exact
+    * invariant is structural) under the stale vs multi-repaired
+    * ([[rebalanceCellsMerge]]) coarse quantiser, plus exact
     * ground-truth hits of the stale / multi-repaired / fresh serving
-    * paths. Residual books retrain on the OLD corpus against the
-    * repaired cells ([[IvfPqResidualModel.fromCentroids]]) — the
-    * repair never trains corpus-scale, exactly as q_sim17.
+    * paths.
     */
   def indexMultiRepairReport(emb: DataFrame, nCentroids: Int = 16,
                              nProbe: Int = 2, nCodes: Int = 16,
@@ -1528,79 +1236,37 @@ object Similarity {
       : DataFrame = {
     Clustering.requireScaledK("indexMultiRepairReport", nCentroids,
       fixtureScale)
-    val s = emb.sparkSession
-    import s.implicits._
-    graft.functions.DoubleVecDot.register(s)
-    val embOld = emb.where(col("vec_id") < oldCut)
-    val embNew = emb.where(col("vec_id") >= oldCut)
-    // stale and fresh trainings are independent — run concurrently
-    val (stale, fresh) = inParallel(
-      IvfPqResidualModel.train(embOld, nCentroids, nCodes, m, iters,
-        dim),
-      IvfPqResidualModel.train(emb, nCentroids, nCodes, m, iters, dim))
-    val embq = quantised(emb)
-    val (multiCents, _, _) = rebalanceCellsMerge(embq, stale.cents,
+    val mt = new Maintenance(emb, nCentroids, nProbe, nCodes, m, iters,
+      nQueries, k, dim, oldCut)
+    val (stale, fresh) = mt.staleAndFresh()
+    val (multiCents, _, _) = rebalanceCellsMerge(mt.embq, stale.cents,
       iters, dim, splits)
     require(multiCents.length == nCentroids,
       "multi-repair must keep k bounded")
-    val multi = IvfPqResidualModel.fromCentroids(multiCents, embOld,
-      nCodes, m, iters, dim)
-    val queries = embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    val staleIdx = ivfPqResidualIndex(embOld, stale, m, dim)
-      .unionAll(ivfPqResidualIndex(embNew, stale, m, dim))
-    def served(idx: DataFrame, model: IvfPqResidualModel): DataFrame =
-      ivfPqResidualSearch(idx, queries, model, nProbe, k, m, dim)
-        .select("qid", "vec_id")
-    val truth = bruteForceTopK(emb, nQueries, k)
-      .select("qid", "vec_id")
-    def hits(pairs: DataFrame, name: String): DataFrame =
-      truth.join(pairs, Seq("qid", "vec_id"))
-        .agg(count(lit(1)).as(name))
-    def occ(cs: Array[(Int, Array[Double])], name: String): DataFrame =
-      embq.withColumn("cell", pqCodeExprD(cs, col("qv")))
-        .groupBy("cell").agg(count(lit(1)).as(name))
-        .select(col("cell").cast("long").as("cell"), col(name))
-    val cells = (0 until nCentroids).map(_.toLong).toDF("cell")
-    cells
-      .join(occ(stale.cents, "n_before_raw"), Seq("cell"), "left")
-      .join(occ(multiCents, "n_after_raw"), Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_before_raw"), lit(0L)).as("n_before"),
-        coalesce(col("n_after_raw"), lit(0L)).as("n_after"))
-      .crossJoin(broadcast(hits(served(staleIdx, stale), "stale_hits")))
-      .crossJoin(broadcast(hits(
-        served(ivfPqResidualIndex(emb, multi, m, dim), multi),
-        "multi_hits")))
-      .crossJoin(broadcast(hits(
-        served(ivfPqResidualIndex(emb, fresh, m, dim), fresh),
-        "fresh_hits")))
-      .crossJoin(broadcast(truth.agg(count(lit(1)).as("truth_total"))))
+    mt.withHits(mt.perCell(nCentroids, mt.occ(stale.cents, "n_before"),
+      mt.occ(multiCents, "n_after"))("n_before", "n_after"),
+      (mt.incremental(stale), stale) -> "stale_hits",
+      mt.fromScratch(mt.retrain(multiCents)) -> "multi_hits",
+      mt.fromScratch(fresh) -> "fresh_hits")
   }
 
   /** q_sim19: the COMPOSED maintenance flow a production index runs —
-    * monitor → threshold → repair → verify — in one operator. q_sim16
-    * measures staleness, q_sim17/18 repair; this gate proves the
-    * TRIGGER logic that connects them:
+    * monitor → threshold → repair → verify — in one operator:
     *
-    *  1. MONITOR: occupancy of the grown corpus under the stale
-    *     coarse quantiser (one k-row model-sized collect — the
-    *     established monitor shape);
+    *  1. MONITOR: occupancy of the grown corpus under the stale coarse
+    *     quantiser (one k-row model-sized collect);
     *  2. THRESHOLD: all-BIGINT skew test
     *     `maxN · k · trigDen > trigNum · totalN` (the hottest cell
     *     exceeds trigNum/trigDen × the mean cell) — integer
     *     arithmetic, so Spark and the DuckDB twin decide identically;
-    *  3. REPAIR (only when triggered): [[rebalanceHotCell]] +
-    *     residual books retrained on the old corpus — exactly the
-    *     q_sim17 step; an untriggered report leaves the model
-    *     UNTOUCHED (n_after = n_before, stale serving);
-    *  4. VERIFY: exact ground-truth hits of the SERVED model (stale
-    *     or repaired, whichever step 3 chose).
+    *  3. REPAIR (only when triggered): exactly the q_sim17 step; an
+    *     untriggered report leaves the model UNTOUCHED (n_after =
+    *     n_before, the stale model serving from its incremental index);
+    *  4. VERIFY: exact ground-truth hits of the SERVED model.
     *
-    * Output (all BIGINT, hash-gated): one row per cell 0..k (the
-    * split cell k is 0/0 when untriggered, so the schema is
-    * branch-invariant): `n_before` / `n_after` occupancy, `triggered`
-    * (0/1), `served_hits` / `truth_total`.
+    * Output: one row per cell 0..k (the split cell k is 0/0 when
+    * untriggered, so the schema is branch-invariant): `n_before` /
+    * `n_after`, `triggered` (0/1), `served_hits` / `truth_total`.
     */
   def indexMaintenance(emb: DataFrame, nCentroids: Int = 16,
                        nProbe: Int = 2, nCodes: Int = 16,
@@ -1614,117 +1280,35 @@ object Similarity {
       fixtureScale)
     require(trigNum >= 1 && trigDen >= 1,
       s"trigger ratio must be positive, got $trigNum/$trigDen")
-    val s = emb.sparkSession
-    import s.implicits._
-    graft.functions.DoubleVecDot.register(s)
-    val embOld = emb.where(col("vec_id") < oldCut)
-    val embNew = emb.where(col("vec_id") >= oldCut)
-    val stale = IvfPqResidualModel.train(embOld, nCentroids, nCodes,
-      m, iters, dim)
-    val embq = quantised(emb)
-    // 1. MONITOR — k-row collect, model-sized by construction
-    val occ = embq
-      .withColumn("cell", pqCodeExprD(stale.cents, col("qv")))
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val totalN = occ.values.sum
+    val mt = new Maintenance(emb, nCentroids, nProbe, nCodes, m, iters,
+      nQueries, k, dim, oldCut)
+    val stale = mt.train(mt.embOld)
+    val occ = cellCounts(assign(mt.embq, stale.cents))
     val maxN = (0 until nCentroids).map(c => occ.getOrElse(c, 0L)).max
-    // 2. THRESHOLD — exact integer skew test
     val triggered =
-      maxN * nCentroids * trigDen > trigNum.toLong * totalN
-    val queries = embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    def served(idx: DataFrame, model: IvfPqResidualModel): DataFrame =
-      ivfPqResidualSearch(idx, queries, model, nProbe, k, m, dim)
-        .select("qid", "vec_id")
-    val truth = bruteForceTopK(emb, nQueries, k)
-      .select("qid", "vec_id")
-    def hits(pairs: DataFrame): DataFrame =
-      truth.join(pairs, Seq("qid", "vec_id"))
-        .agg(count(lit(1)).as("served_hits"))
-    // 3. REPAIR or keep; 4. VERIFY the served model
-    val (afterOcc, servedHits) =
+      maxN * nCentroids * trigDen > trigNum.toLong * occ.values.sum
+    val (afterCents, served) =
       if (triggered) {
-        val (rebalCents, _) = rebalanceHotCell(embq, stale.cents,
+        val (rebalCents, _) = rebalanceHotCell(mt.embq, stale.cents,
           iters, dim)
-        val rebal = IvfPqResidualModel.fromCentroids(rebalCents,
-          embOld, nCodes, m, iters, dim)
-        val occA = embq
-          .withColumn("cell", pqCodeExprD(rebalCents, col("qv")))
-          .groupBy("cell").agg(count(lit(1)).as("n_after_raw"))
-          .select(col("cell").cast("long").as("cell"),
-            col("n_after_raw"))
-        (occA,
-          hits(served(ivfPqResidualIndex(emb, rebal, m, dim), rebal)))
-      } else {
-        // untouched: the stale model keeps serving from its
-        // incrementally-maintained index (q_sim17's stale leg)
-        val occA = embq
-          .withColumn("cell", pqCodeExprD(stale.cents, col("qv")))
-          .groupBy("cell").agg(count(lit(1)).as("n_after_raw"))
-          .select(col("cell").cast("long").as("cell"),
-            col("n_after_raw"))
-        val staleIdx = ivfPqResidualIndex(embOld, stale, m, dim)
-          .unionAll(ivfPqResidualIndex(embNew, stale, m, dim))
-        (occA, hits(served(staleIdx, stale)))
-      }
-    val beforeOcc = embq
-      .withColumn("cell", pqCodeExprD(stale.cents, col("qv")))
-      .groupBy("cell").agg(count(lit(1)).as("n_before_raw"))
-      .select(col("cell").cast("long").as("cell"),
-        col("n_before_raw"))
-    val cells = (0 to nCentroids).map(_.toLong).toDF("cell")
-    cells
-      .join(beforeOcc, Seq("cell"), "left")
-      .join(afterOcc, Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_before_raw"), lit(0L)).as("n_before"),
-        coalesce(col("n_after_raw"), lit(0L)).as("n_after"),
-        lit(if (triggered) 1L else 0L).as("triggered"))
-      .crossJoin(broadcast(servedHits))
-      .crossJoin(broadcast(truth.agg(count(lit(1)).as("truth_total"))))
-  }
-
-  /** Gate shape: nProbe = nCentroids/2 and r = 32·k measure recall
-    * 1.0 on the fixture (the spec pins ≥0.95) — the point of the
-    * stage: a SMALL exact budget (r ≪ corpus) erases the ADC
-    * ranking error, leaving only the coarse-prune miss rate.
-    */
-  def ivfPqRerankTopK(emb: DataFrame, nCentroids: Int = 16,
-                      nProbe: Int = 8, nCodes: Int = 16, m: Int = 8,
-                      iters: Int = 2, nQueries: Int = 8, r: Int = 160,
-                      k: Int = 5, dim: Int = 64,
-                      fixtureScale: Boolean = false): DataFrame = {
-    Clustering.requireScaledK("ivfPqRerankTopK", nCentroids,
-      fixtureScale)
-    graft.functions.DoubleVecDot.register(emb.sparkSession)
-    val model = IvfPqTrainedModel.train(emb, nCentroids, nCodes, m,
-      iters, dim)
-    val embq = quantised(emb)
-    val queries = embq.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    ivfPqRerankSearch(ivfPqTrainedIndex(emb, model, m, dim), embq,
-      queries, model, nProbe, r, k, m, dim)
+        (rebalCents, mt.fromScratch(mt.retrain(rebalCents)))
+      } else (stale.cents, (mt.incremental(stale), stale))
+    mt.withHits(mt.perCell(nCentroids + 1, mt.occ(stale.cents, "n_before"),
+      mt.occ(afterCents, "n_after"))("n_before", "n_after")
+      .withColumn("triggered", lit(if (triggered) 1L else 0L)),
+      served -> "served_hits")
   }
 
   /** Recall@k of the nine approximate retrieval methods (LSH ×2, IVF,
     * PQ ×2, IVF-PQ seed/trained/residual, trained+exact-rerank)
     * against [[bruteForceTopK]]'s exact ground truth — the quality
-    * number an ANN index is FOR (the determinism gates q_sim2/3/4/
-    * 10–14 prove the indexes reproduce; this one grades them as
-    * approximations). Both sides are deterministic, so the recall is
-    * an exact fraction the DuckDB twin pins bit-for-bit.
+    * number an ANN index is FOR. Both sides are deterministic, so the
+    * recall is an exact fraction the DuckDB twin pins bit-for-bit.
     *
     * Output: one row per method — (method, n_hits, n_truth, recall)
     * with recall = n_hits / n_truth over all queries (micro recall@k).
-    * `nProbe` exposes IVF's recall/cost dial so callers (and the spec)
-    * can show recall RISING with probed cells; the other knobs default
+    * `nProbe` exposes IVF's recall/cost dial; the other knobs default
     * to the q_sim2/3/4 gate shapes.
-    *
-    * Scale: ground truth at nQueries·k rows is model-sized (lazily
-    * localCheckpointed for its two consumers); each index runs its own
-    * already-audited distributed shape; the final joins/aggregates
-    * touch retrieved-set-sized frames only.
     */
   def annRecall(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
                 nCentroids: Int = 16, nProbe: Int = 2,
@@ -1741,32 +1325,18 @@ object Similarity {
     // one non-thread-safe step
     graft.functions.DoubleVecDot.register(spark)
     graft.functions.FloatVecDot.register(spark)
-    // train the coarse quantiser + raw-vector codebooks ONCE and
-    // serve every trained-family row from them (training is
-    // driver-looped corpus scans — the expensive part):
-    // pq_trained = full probe ≡ the un-pruned trained ADC scan
-    // (SimilaritySpec pins the identity), ivfpq_trained = nProbe,
-    // ivfpq_residual = the same centroids with residual-trained
-    // codebooks at the SAME nProbe (the IVF-ADC row the raw-vector
-    // one is graded against), ivfpq_rerank = the trained index at its
-    // own serving dial (nProbe = cells/2, exact re-rank of the ADC
-    // top-32k) — the row that shows a small exact budget restores
-    // recall ≈ 1.0
-    // CONCURRENT matrix assembly (optimization-guide §2.6, the r22
-    // restructure): the nine arms and the three model trainings are
-    // mutually independent except trained-family → tm and residual →
-    // tm.cents, yet the r21 shape ran "train everything, then execute
-    // one 9-arm union plan" — the union's arm subtrees executed
-    // largely back-to-back and the trainings idled most cores
-    // (PhaseProbe: 2.9 s construct + 2.5 s exec). Here driver threads
-    // overlap (a) the truth materialisation, (b) the five seed-family
-    // arms — EAGER localCheckpoints, each a tiny frame — and (c) the
-    // coarse+codebook training; the residual training and the four
-    // trained-family arms follow as soon as their model half is
-    // ready. Results are identical: every arm is the same
-    // deterministic frame, merely materialised early (plan-private
-    // checkpoints, never the session CacheManager), and the final
-    // union reads the checkpointed blocks.
+    // the coarse quantiser + raw-vector codebooks train ONCE and serve
+    // every trained-family row: pq_trained = full probe (≡ the
+    // un-pruned trained ADC scan, spec-pinned), ivfpq_trained =
+    // nProbe, ivfpq_residual = the same centroids with residual-trained
+    // codebooks at the SAME nProbe, ivfpq_rerank = the trained index at
+    // its own serving dial (nProbe = cells/2, exact re-rank of the ADC
+    // top-32k). Driver threads overlap (a) the truth materialisation,
+    // (b) the five seed-family arms — EAGER localCheckpoints, each a
+    // tiny frame — and (c) the training; the residual training and the
+    // trained-family arms follow as soon as their model is ready.
+    // Results are identical to a sequential union: every arm is the
+    // same deterministic frame, merely materialised early.
     Clustering.requireScaledK("annRecall(trained)", nCentroids,
       fixtureScale)
     val seedArms: Seq[(String, () => DataFrame)] = Seq(
@@ -1778,40 +1348,34 @@ object Similarity {
         nQueries = nQueries, k = k, fixtureScale = fixtureScale)),
       ("pq", () => pqTopK(emb, nQueries = nQueries, k = k)))
     val (tm, seedDone) = inParallel(
-      IvfPqTrainedModel.train(emb, nCentroids),
+      IvfPqModel.train(emb, nCentroids),
       inParallelAll(
         (() => { truth.count(); null: DataFrame }) +:
           seedArms.map { case (m, build) =>
             () => ids(build(), m).localCheckpoint()
           }, threads = 6))
-    val tIdx = ivfPqTrainedIndex(emb, tm)
-      .localCheckpoint(eager = false)
-    val tQ = quantised(emb).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
+    val tIdx = ivfPqIndex(emb, tm).localCheckpoint(eager = false)
+    val tQ = tm.queries(emb, nQueries)
     // NOTE the q_sim8 DuckDB twin is FIXED at the 16-centroid gate
-    // shape (its inner sim3/sim10/sim12/sim13/sim14 bodies all
-    // derive from the vec_id < 16 seed rule, and the rerank row
-    // probes 16/2 = 8 cells); a non-default nCentroids here is
-    // spec-only — the Spark matrix stays self-consistent but has no
-    // oracle at that shape
+    // shape (its inner sim3/sim10/sim12/sim13/sim14 bodies all derive
+    // from the vec_id < 16 seed rule, and the rerank row probes
+    // 16/2 = 8 cells); a non-default nCentroids here is spec-only
     val (residualArm, trainedRaw) = inParallel(
       {
         // residual training AND its arm on one thread: the arm is the
-        // training's only consumer, so chaining them keeps the whole
-        // residual path overlapped with the trained-family arms
-        val rm = IvfPqResidualModel.fromCentroids(tm.cents, emb)
-        ids(ivfPqResidualSearch(ivfPqResidualIndex(emb, rm), tQ, rm,
-          nProbe = nProbe, k = k), "ivfpq_residual").localCheckpoint()
+        // training's only consumer
+        val rm = IvfPqModel.residualOn(tm.cents, emb)
+        ids(ivfPqSearch(ivfPqIndex(emb, rm), tQ, rm, nProbe, k),
+          "ivfpq_residual").localCheckpoint()
       },
       inParallelAll(Seq(
-        () => ids(ivfPqTrainedSearch(tIdx, tQ, tm,
-          nProbe = tm.cents.length, k = k), "pq_trained")
-          .localCheckpoint(),
-        () => ids(ivfPqTrainedSearch(tIdx, tQ, tm, nProbe = nProbe,
-          k = k), "ivfpq_trained").localCheckpoint(),
-        () => ids(ivfPqRerankSearch(tIdx, quantised(emb), tQ, tm,
-          nProbe = tm.cents.length / 2, r = 32 * k, k = k),
-          "ivfpq_rerank").localCheckpoint())))
+        () => ids(ivfPqSearch(tIdx, tQ, tm, tm.cents.length, k),
+          "pq_trained").localCheckpoint(),
+        () => ids(ivfPqSearch(tIdx, tQ, tm, nProbe, k),
+          "ivfpq_trained").localCheckpoint(),
+        () => ids(ivfPqRerankSearch(tIdx, tm.vectors(emb), tQ, tm,
+          tm.cents.length / 2, 32 * k, k), "ivfpq_rerank")
+          .localCheckpoint())))
     val got = (seedDone.drop(1) ++ trainedRaw :+ residualArm)
       .reduce(_ unionByName _)
     val hits = got.join(truth, Seq("qid", "vec_id"))
@@ -1870,19 +1434,13 @@ object Similarity {
     val q = broadcast(withNorm.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn")))
-    val scored = cand
+    topK(cand
       .join(q, "qid")
       .join(withNorm.select(col("vec_id"), col("embedding"),
         col("nrm")), "vec_id")
-      .withColumn("cos_r",
+      .withColumn("cos_sim",
         round(expr(dotSql("qe", "embedding")(SparkD))
-          / (col("qn") * col("nrm")), 6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        col("cos_r").as("cos_sim"))
+          / (col("qn") * col("nrm")), 6)), "cos_sim", k)
   }
 
   /** Bucketed ANN: same ranking but candidates limited to the query's
@@ -1896,16 +1454,10 @@ object Similarity {
     val q = broadcast(bucketed.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("bucket"), col("nrm").as("qn")))
-    val scored = q.join(bucketed, Seq("bucket"))
+    topK(q.join(bucketed, Seq("bucket"))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos", expr(dotSql("qe", "embedding")(SparkD))
-        / (col("qn") * col("nrm")))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("bucket"), col("rank"), col("vec_id"),
-        col("cos_r").as("cos_sim"))
+      .withColumn("cos_sim", round(expr(dotSql("qe", "embedding")(SparkD))
+        / (col("qn") * col("nrm")), 6)), "cos_sim", k,
+      lead = Seq("qid", "bucket"))
   }
 }

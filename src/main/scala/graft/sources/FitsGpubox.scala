@@ -39,13 +39,59 @@ object FitsGpubox {
   final case class Hdu(cards: Map[String, String], dataPos: Long,
                        dataLen: Long)
 
-  private def parseCardValue(card: String): Option[(String, String)] = {
-    val key = card.take(8).trim
-    if (key.isEmpty || key == "COMMENT" || key == "HISTORY") None
-    else if (card.length > 9 && card.charAt(8) == '=') {
-      val raw = card.substring(10).takeWhile(_ != '/').trim
-      Some(key -> raw.stripPrefix("'").stripSuffix("'").trim)
-    } else Some(key -> "")
+  /** The quoted string at the start of a value field (after blanks),
+    * read to its closing quote — `''` is an escaped quote and a `/`
+    * inside the quotes is text, not a comment — with trailing blanks
+    * dropped (FITS 4.0 §4.2.1.1). None when the field holds no string.
+    */
+  private def quoted(field: String): Option[String] = {
+    val t = field.dropWhile(_ == ' ')
+    if (!t.startsWith("'")) None
+    else {
+      val sb = new StringBuilder
+      var i = 1
+      var closed = false
+      while (i < t.length && !closed) {
+        if (t(i) != '\'') { sb += t(i); i += 1 }
+        else if (i + 1 < t.length && t(i + 1) == '\'') { sb += '\''; i += 2 }
+        else closed = true
+      }
+      Some(sb.toString.reverse.dropWhile(_ == ' ').reverse)
+    }
+  }
+
+  /** Keyword → value of one header's cards (END excluded). A string
+    * ending in `&` continues in the CONTINUE cards that follow it, each
+    * replacing the `&` with its own string (FITS 4.0 §4.2.1.2); a
+    * non-string value runs to the `/` of its comment. Values are
+    * trimmed; COMMENT and HISTORY cards carry none.
+    */
+  private[sources] def headerCards(cards: Seq[String]): Map[String, String] = {
+    val out = scala.collection.mutable.Map[String, String]()
+    var continuing: Option[String] = None
+    cards.foreach { card =>
+      val key = card.take(8).trim
+      continuing match {
+        case Some(k) if key == "CONTINUE" =>
+          val s = quoted(card.drop(8)).getOrElse("")
+          out(k) = out(k).dropRight(1) + s
+          if (!s.endsWith("&")) continuing = None
+        case _ =>
+          continuing = None
+          if (key.isEmpty || key == "COMMENT" || key == "HISTORY" ||
+            key == "CONTINUE") ()
+          else if (card.length > 9 && card.charAt(8) == '=') {
+            val field = card.substring(10)
+            quoted(field) match {
+              case Some(s) =>
+                out(key) = s
+                if (s.endsWith("&")) continuing = Some(key)
+              case None => out(key) = field.takeWhile(_ != '/')
+            }
+          } else out(key) = ""
+      }
+    }
+    out.map { case (k, v) => k -> v.trim }.toMap
   }
 
   /** Walk every HDU in the file: read header blocks to END, compute the
@@ -59,7 +105,7 @@ object FitsGpubox {
     val out = Seq.newBuilder[Hdu]
     var pos = 0L
     while (pos + BlockSize <= size) {
-      val cards = scala.collection.mutable.Map[String, String]()
+      val header = Seq.newBuilder[String]
       var ended = false
       var hPos = pos
       while (!ended && hPos + BlockSize <= size) {
@@ -68,13 +114,12 @@ object FitsGpubox {
         (0 until BlockSize / CardSize).foreach { i =>
           val card = text.substring(i * CardSize, (i + 1) * CardSize)
           if (card.take(8).trim == "END") ended = true
-          else if (!ended) parseCardValue(card).foreach {
-            case (k, v) => cards(k) = v
-          }
+          else if (!ended) header += card
         }
         hPos += BlockSize
       }
       if (!ended) return out.result() // trailing garbage — stop
+      val cards = headerCards(header.result())
       val bitpix = cards.getOrElse("BITPIX", "8").toInt
       val naxis = cards.getOrElse("NAXIS", "0").toInt
       val dataLen = if (naxis == 0) 0L
@@ -83,7 +128,7 @@ object FitsGpubox {
           .product * (math.abs(bitpix) / 8)
       if (hPos + dataLen > size) return out.result() // truncated HDU
       val padded = (dataLen + BlockSize - 1) / BlockSize * BlockSize
-      out += Hdu(cards.toMap, hPos, dataLen)
+      out += Hdu(cards, hPos, dataLen)
       pos = hPos + padded
     }
     out.result()

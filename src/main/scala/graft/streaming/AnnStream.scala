@@ -9,25 +9,26 @@ import org.apache.spark.sql.types._
 /** Structured Streaming twin of the IVF-PQ index
   * ([[graft.llm.Similarity.ivfPqIndex]] /
   * [[graft.llm.Similarity.ivfPqSearch]]): the two always-on halves of
-  * a production vector store.
+  * a production vector store, for every [[IvfPqModel]] — seeded,
+  * trained or residual-encoded, trained offline on the batch corpus.
   *
   *  - [[indexStream]] — continuous index MAINTENANCE: every arriving
-  *    vector is assigned its coarse cell and m PQ codes. The model
-  *    (centroids + codebooks) is bounded driver state baked into the
-  *    plan as literals, so the stage is a stateless row-local
-  *    projection — no state store, no watermark, append mode; at
-  *    100 TB/day ingest this parallelises like any map.
+  *    vector is assigned its coarse cell and m PQ codes (residual
+  *    codes for a residual model). The model is bounded driver state
+  *    baked into the plan as literals, so the stage is a stateless
+  *    row-local projection — no state store, no watermark, append
+  *    mode; at 100 TB/day ingest this parallelises like any map.
   *  - [[matchStream]] — STANDING queries ("alert me when something
   *    close to q arrives"): each arriving vector is ADC-scored
   *    against the broadcast query set and emitted when the score
-  *    clears `minScoreQ`. Scoring reads only the vector's codes —
-  *    the same asymmetric-distance rule as the batch search — and a
-  *    threshold (not top-k) keeps the operator stateless: per-query
-  *    top-k over an unbounded stream is not a well-defined append
-  *    query, the thresholded match set is.
+  *    clears `minScoreQ`. Scoring is the batch search's own ADC score
+  *    expression over the vector's codes, and a threshold (not top-k)
+  *    keeps the operator stateless: per-query top-k over an unbounded
+  *    stream is not a well-defined append query, the thresholded
+  *    match set is.
   *
-  * Both twins reuse the BATCH operators' column expressions, so
-  * parity with `ivfPqIndex`/the batch threshold filter is structural
+  * Both twins are the BATCH operators' column expressions, so parity
+  * with `ivfPqIndex`/the batch threshold filter is structural
   * (StreamingSpec pins it).
   */
 object AnnStream {
@@ -48,76 +49,29 @@ object AnnStream {
     * arriving vector — the exact [[Similarity.ivfPqIndex]] projection
     * on an unbounded source.
     */
-  def indexStream(emb: DataFrame, model: IvfPqModel, m: Int = 8,
-                  dim: Int = 64): DataFrame =
-    Similarity.ivfPqIndex(emb, model, m, dim)
+  def indexStream(emb: DataFrame, model: IvfPqModel): DataFrame =
+    Similarity.ivfPqIndex(emb, model)
 
   /** Streaming standing-query match: ADC score of every arriving
     * vector against each query, kept when `score_uq >= minScoreQ`
     * (micro-unit integer, order-free). `queries` is the bounded
-    * standing set `(qid, qe)` — broadcast, never streamed.
+    * standing set `(qid, qe)` on the model's grid — broadcast, never
+    * streamed.
     */
   def matchStream(emb: DataFrame, queries: DataFrame,
-                  model: IvfPqModel, minScoreQ: Long, m: Int = 8,
-                  dim: Int = 64): DataFrame = {
-    graft.functions.FloatVecDot.register(emb.sparkSession)
-    val subDim = dim / m
-    val coded = Similarity.ivfPqIndex(emb, model, m, dim)
-    val cwLit = Array.tabulate(m)(s =>
-      typedLit(model.codebooks(s).map(_._2.toSeq).toSeq))
-    val scoreCol = (0 until m).map { s =>
-      call_function("float_dot",
-        slice(col("qe"), s * subDim + 1, subDim),
-        element_at(cwLit(s), col(s"c$s") + 1))
-    }.reduce(_ + _)
-    coded.join(broadcast(queries), col("vec_id") =!= col("qid"))
+                  model: IvfPqModel, minScoreQ: Long): DataFrame =
+    Similarity.ivfPqIndex(emb, model)
+      .join(broadcast(queries), col("vec_id") =!= col("qid"))
       .withColumn("score_uq",
-        floor(round(scoreCol, 6) * 1e6 + 0.5).cast("long"))
+        floor(model.score(col("qe")) * 1e6 + 0.5).cast("long"))
       .where(col("score_uq") >= minScoreQ)
       .select("qid", "vec_id", "cell", "score_uq")
-  }
-
-  /** Streaming index maintenance with the FULLY-trained model
-    * ([[Similarity.IvfPqTrainedModel]], trained offline on the batch
-    * corpus — the offline-model streaming pattern the tokenizer/DSIR
-    * twins use): the exact [[Similarity.ivfPqTrainedIndex]]
-    * projection on an unbounded source, stateless.
-    */
-  def indexStreamTrained(emb: DataFrame,
-                         model: Similarity.IvfPqTrainedModel,
-                         m: Int = 8, dim: Int = 64): DataFrame =
-    Similarity.ivfPqTrainedIndex(emb, model, m, dim)
-
-  /** Streaming index maintenance with the RESIDUAL-encoded model
-    * ([[Similarity.IvfPqResidualModel]], the canonical IVF-ADC
-    * layout): cell assignment, integer residual vs the snapped
-    * centroid, and m residual codes per arriving vector — the exact
-    * [[Similarity.ivfPqResidualIndex]] projection on an unbounded
-    * source, stateless (the model is literals in the plan).
-    */
-  def indexStreamResidual(emb: DataFrame,
-                          model: Similarity.IvfPqResidualModel,
-                          m: Int = 8, dim: Int = 64): DataFrame =
-    Similarity.ivfPqResidualIndex(emb, model, m, dim)
 
   /** One-shot drains for the spec. */
   def runIndexOnce(spark: SparkSession, dir: String,
                    model: IvfPqModel): DataFrame =
     StreamDrain.runOnce(indexStream(readEmbStream(spark, dir), model),
       "ann_index_stream")
-
-  def runIndexTrainedOnce(spark: SparkSession, dir: String,
-                          model: Similarity.IvfPqTrainedModel): DataFrame =
-    StreamDrain.runOnce(
-      indexStreamTrained(readEmbStream(spark, dir), model),
-      "ann_index_trained_stream")
-
-  def runIndexResidualOnce(spark: SparkSession, dir: String,
-                           model: Similarity.IvfPqResidualModel)
-      : DataFrame =
-    StreamDrain.runOnce(
-      indexStreamResidual(readEmbStream(spark, dir), model),
-      "ann_index_residual_stream")
 
   def runMatchOnce(spark: SparkSession, dir: String,
                    queries: DataFrame, model: IvfPqModel,

@@ -23,8 +23,16 @@ import graft.model.Obs
   */
 object MetafitsSynth {
 
-  private def card(k: String, v: String): String =
-    (k.padTo(8, ' ') + "= " + v).padTo(80, ' ')
+  /** One 80-character header card. A longer card is refused: padding
+    * cannot shorten it, and writing it would shift every later card of
+    * its 2880-byte block.
+    */
+  private def card(k: String, v: String): String = {
+    val c = k.padTo(8, ' ') + "= " + v
+    require(c.length <= 80, s"metafits card $k is ${c.length} > 80 " +
+      "characters; split a long string over CONTINUE cards")
+    c.padTo(80, ' ')
+  }
 
   private def pad2880(b: Array[Byte], fill: Byte = ' '.toByte)
       : Array[Byte] = {

@@ -93,4 +93,48 @@ class MetafitsSpec extends AnyFunSuite {
     val onSynth = CableCorrection(vis, Dims.antenna(spark))
     assert(rows(onParsed) == rows(onSynth))
   }
+
+  test("long strings: a 24-channel CHANNELS over CONTINUE cards and " +
+    "a quoted value holding '/' read back exactly") {
+    def card(c: String): String = {
+      require(c.length <= 80, s"card longer than 80: $c")
+      c.padTo(80, ' ')
+    }
+    def header(cards: String*): Array[Byte] = {
+      val text = (cards :+ "END").map(card).mkString
+      text.padTo((text.length + 2879) / 2880 * 2880, ' ')
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    }
+    val chans = (131 to 154).mkString(",")
+    assert(chans.length == 95, "the list no single card can hold")
+    val parts = chans.grouped(40).toVector
+    val channelCards =
+      s"CHANNELS= '${parts.head}&'" +:
+        parts.tail.init.map(p => s"CONTINUE  '$p&'") :+
+        s"CONTINUE  '${parts.last}' / receiver channels"
+    val primary = header(Seq(
+      "SIMPLE  =                    T",
+      "BITPIX  =                    8",
+      "NAXIS   =                    0") ++ channelCards ++ Seq(
+      "TILENOTE= 'rx 3/slot 4, don''t swap' / a comment",
+      "NCHANS  =                  768 / fine channels"): _*)
+    val table = header(
+      "XTENSION= 'BINTABLE'",
+      "BITPIX  =                    8",
+      "NAXIS   =                    2",
+      "NAXIS1  =                    0",
+      "NAXIS2  =                    0",
+      "PCOUNT  =                    0",
+      "GCOUNT  =                    1",
+      "TFIELDS =                    0",
+      "EXTNAME = 'TILEDATA'")
+    val path = java.nio.file.Files.createTempDirectory("metafits_long")
+      .resolve("long.metafits")
+    java.nio.file.Files.write(path, primary ++ table)
+    val m = MetafitsReader.read(path.toString)
+    assert(m.coarseChans == (131 to 154).toVector)
+    assert(m.keywords("CHANNELS") == chans)
+    assert(m.keywords("TILENOTE") == "rx 3/slot 4, don't swap")
+    assert(m.nChans == 768 && m.fineChansPerCoarse == 32)
+  }
 }

@@ -20,6 +20,44 @@ class SimilaritySpec extends AnyFunSuite {
   private def emb = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSet
+
+  /** `emb`'s first 8 vectors as `(qid, qe)` in micro units. */
+  private def microQueries = {
+    import graft.llm.Clustering
+    import graft.llm.TextExprs.SparkD
+    emb.where(col("vec_id") < 8)
+      .select(col("vec_id").as("qid"),
+        expr(Clustering.quantSql("embedding")(SparkD)).as("qe"))
+  }
+
+  /** The serving split: `model`'s index persisted `partitionBy("cell")`
+    * and searched with `staticPrune` must reproduce the composed `gate`,
+    * and the static IN filter over the partition column must reach the
+    * scan as a PartitionFilter (at 100 TB: only probed cells' files are
+    * read — the AnnProbe-measured serving property). AQE wraps the scan
+    * nodes, so the assertion reads the executed plan's rendering.
+    */
+  private def assertServingSplit(model: Similarity.IvfPqModel,
+                                 queries: org.apache.spark.sql.DataFrame,
+                                 gate: org.apache.spark.sql.DataFrame,
+                                 what: String): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("annidx")
+      .toString + "/index"
+    Similarity.ivfPqIndex(emb, model)
+      .write.partitionBy("cell").mode("overwrite").parquet(dir)
+    val served = Similarity.ivfPqSearch(spark.read.parquet(dir), queries,
+      model, staticPrune = true)
+    assert(rows(served) == rows(gate),
+      s"served $what path must reproduce the composed gate")
+    served.collect()
+    val pf = served.queryExecution.executedPlan.toString().linesIterator
+      .filter(_.contains("PartitionFilters: [")).mkString(";")
+    assert(pf.contains("cell"),
+      s"probe cells must prune partitions, got: $pf")
+  }
+
   /** Mean squared distance of each vector to its NEAREST centroid. */
   private def cost(cents: Array[(Int, Array[Float])]): Double = {
     graft.functions.FloatVecDot.register(spark)
@@ -195,8 +233,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("fully-trained IVF-PQ (q_sim12): probing every trained cell " +
     "reproduces the full trained-PQ/ADC scan") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
     // nProbe = nCentroids removes the prune: the candidate set is the
     // whole corpus, so the result must equal the un-pruned trained
     // ADC scan — identical books, identical scoring rule
@@ -212,52 +248,32 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pruned.count() > 0)
   }
 
+  test("seeded IVF-PQ serving split: a persisted cell-partitioned " +
+    "index + static prune reproduces the q_sim10 composed gate as a " +
+    "partition-pruned read") {
+    assertServingSplit(Similarity.IvfPqModel.seed(emb),
+      emb.where(col("vec_id") < 8)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+      Similarity.ivfPqTopK(emb, fixtureScale = true), "seeded")
+  }
+
   test("trained IVF-PQ serving split: a persisted cell-partitioned " +
     "index + static prune reproduces the composed gate as a " +
     "partition-pruned read") {
-    import graft.llm.Clustering
-    import graft.llm.TextExprs.SparkD
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    val model = Similarity.IvfPqTrainedModel.train(emb)
-    val dir = java.nio.file.Files.createTempDirectory("annidx")
-      .toString + "/index"
-    Similarity.ivfPqTrainedIndex(emb, model)
-      .write.partitionBy("cell").mode("overwrite").parquet(dir)
-    val idx = spark.read.parquet(dir)
-    val queries = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"),
-        expr(Clustering.quantSql("embedding")(SparkD)).as("qe"))
-    val served = Similarity.ivfPqTrainedSearch(idx, queries, model,
-      staticPrune = true)
-    assert(rows(served) ==
-      rows(Similarity.ivfPqTrainedTopK(emb, fixtureScale = true)),
-      "served path must reproduce the composed gate")
-    // the static IN filter over the partition column must reach the
-    // scan as a PartitionFilter (at 100 TB: only probed cells' files
-    // are read — the AnnProbe-measured serving property). AQE wraps
-    // the scan nodes, so assert on the executed plan's rendering.
-    served.collect()
-    val plan = served.queryExecution.executedPlan.toString()
-    val pf = plan.linesIterator
-      .filter(_.contains("PartitionFilters: [")).mkString(";")
-    assert(pf.contains("cell"),
-      s"probe cells must prune partitions, got: $pf")
+    assertServingSplit(Similarity.IvfPqModel.train(emb), microQueries,
+      Similarity.ivfPqTrainedTopK(emb, fixtureScale = true), "trained")
   }
 
   test("residual IVF-PQ (q_sim13): snapped centroids live on the " +
     "integer micro grid, books train on residuals, and the serving " +
     "split reproduces the composed gate as a partition-pruned read") {
-    import graft.llm.Clustering
-    import graft.llm.TextExprs.SparkD
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    val model = Similarity.IvfPqResidualModel.train(emb)
+    val model = Similarity.IvfPqModel.residual(emb)
+    val centsQ = model.centsQ.get
     // the snap target is integer-valued (exact residual arithmetic)
-    assert(model.centsQ.forall(_._2.forall(x => x == math.rint(x)
+    assert(centsQ.forall(_._2.forall(x => x == math.rint(x)
       || x == math.floor(x) || x == math.ceil(x))),
       "snapped centroids must be integers held in doubles")
-    assert(model.centsQ.forall { case (cid, v) =>
+    assert(centsQ.forall { case (cid, v) =>
       v.zip(model.cents.find(_._1 == cid).get._2)
         .forall { case (q, c) => math.abs(q - c) <= 0.5 } },
       "snap must move each component at most half a micro unit")
@@ -268,26 +284,11 @@ class SimilaritySpec extends AnyFunSuite {
       rawBooks.flatten.map(_._2.toSeq),
       "residual training must move the books off the raw-vector ones")
     // serving split: persisted cell-partitioned index + static prune
-    // ≡ the composed gate, with the probe filter reaching the scan
-    // as a PartitionFilter
-    val dir = java.nio.file.Files.createTempDirectory("annresidx")
-      .toString + "/index"
-    Similarity.ivfPqResidualIndex(emb, model)
-      .write.partitionBy("cell").mode("overwrite").parquet(dir)
-    val idx = spark.read.parquet(dir)
-    val queries = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"),
-        expr(Clustering.quantSql("embedding")(SparkD)).as("qe"))
-    val served = Similarity.ivfPqResidualSearch(idx, queries, model,
-      staticPrune = true)
-    assert(rows(served) ==
-      rows(Similarity.ivfPqResidualTopK(emb, fixtureScale = true)),
-      "served residual path must reproduce the composed gate")
-    served.collect()
-    val pf = served.queryExecution.executedPlan.toString().linesIterator
-      .filter(_.contains("PartitionFilters: [")).mkString(";")
-    assert(pf.contains("cell"),
-      s"probe cells must prune partitions, got: $pf")
+    // ≡ the composed q_sim13 gate, with the probe filter reaching the
+    // scan as a PartitionFilter
+    assertServingSplit(model, microQueries, SparkEntry.queries(
+      "q_sim13_ann_ivfpq_residual")(spark, "/root/testdata/sf0.001"),
+      "residual")
   }
 
   test("recall matrix: residual encoding beats raw-vector codes at " +
@@ -350,8 +351,8 @@ class SimilaritySpec extends AnyFunSuite {
     import graft.llm.Clustering
     import graft.llm.TextExprs.SparkD
     graft.functions.DoubleVecDot.register(spark)
-    val tm = Similarity.IvfPqTrainedModel.train(emb)
-    val idx = Similarity.ivfPqTrainedIndex(emb, tm)
+    val tm = Similarity.IvfPqModel.train(emb)
+    val idx = Similarity.ivfPqIndex(emb, tm)
       .localCheckpoint(eager = false)
     val embq = emb.select(col("vec_id"),
       expr(Clustering.quantSql("embedding")(SparkD)).as("qv"))
@@ -421,10 +422,10 @@ class SimilaritySpec extends AnyFunSuite {
     val oldCut = Similarity.StalenessOldCut
     val embOld = emb.where(col("vec_id") < oldCut)
     val embNew = emb.where(col("vec_id") >= oldCut)
-    val model = Similarity.IvfPqResidualModel.train(embOld)
-    val incremental = Similarity.ivfPqResidualIndex(embOld, model)
-      .unionAll(Similarity.ivfPqResidualIndex(embNew, model))
-    val scratch = Similarity.ivfPqResidualIndex(emb, model)
+    val model = Similarity.IvfPqModel.residual(embOld)
+    val incremental = Similarity.ivfPqIndex(embOld, model)
+      .unionAll(Similarity.ivfPqIndex(embNew, model))
+    val scratch = Similarity.ivfPqIndex(emb, model)
     assert(incremental.exceptAll(scratch).isEmpty &&
       scratch.exceptAll(incremental).isEmpty,
       "incremental index build must equal the from-scratch encode")

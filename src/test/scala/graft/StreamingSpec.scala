@@ -184,11 +184,11 @@ class StreamingSpec extends AnyFunSuite {
     import graft.llm.Similarity
     val dir = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val model = Similarity.IvfPqTrainedModel.train(emb)
+    val model = Similarity.IvfPqModel.train(emb)
     val sIdx = graft.streaming.AnnStream
-      .runIndexTrainedOnce(spark, dir, model)
+      .runIndexOnce(spark, dir, model)
       .collect().map(_.toSeq).toSet
-    val bIdx = Similarity.ivfPqTrainedIndex(emb, model)
+    val bIdx = Similarity.ivfPqIndex(emb, model)
       .collect().map(_.toSeq).toSet
     assert(sIdx == bIdx,
       s"trained index parity: ${sIdx.size} vs ${bIdx.size}")
@@ -200,11 +200,11 @@ class StreamingSpec extends AnyFunSuite {
     import graft.llm.Similarity
     val dir = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val model = Similarity.IvfPqResidualModel.train(emb)
+    val model = Similarity.IvfPqModel.residual(emb)
     val sIdx = graft.streaming.AnnStream
-      .runIndexResidualOnce(spark, dir, model)
+      .runIndexOnce(spark, dir, model)
       .collect().map(_.toSeq).toSet
-    val bIdx = Similarity.ivfPqResidualIndex(emb, model)
+    val bIdx = Similarity.ivfPqIndex(emb, model)
       .collect().map(_.toSeq).toSet
     assert(sIdx == bIdx,
       s"residual index parity: ${sIdx.size} vs ${bIdx.size}")
