@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -62,8 +63,12 @@ case class DoubleVecDot(left: Expression, right: Expression)
 object DoubleVecDot {
   /** Register `double_dot` in the session's function registry so it is
     * usable from `expr(...)` strings alongside the shared SQL fragments.
+    * A session that already has it keeps its builder.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_dot", exprs => DoubleVecDot(exprs(0), exprs(1)), "built-in")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("double_dot")))
+      registry.createOrReplaceTempFunction(
+        "double_dot", exprs => DoubleVecDot(exprs(0), exprs(1)), "built-in")
+  }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -64,8 +65,12 @@ case class FloatVecDot(left: Expression, right: Expression)
 object FloatVecDot {
   /** Register `float_dot` in the session's function registry so it is
     * usable from `expr(...)` strings alongside the shared SQL fragments.
+    * A session that already has it keeps its builder.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("float_dot")))
+      registry.createOrReplaceTempFunction(
+        "float_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
+  }
 }

@@ -97,10 +97,10 @@ case class Preprocess(vanVleck: Boolean = false,
     // RFI's `bl`, when it runs, lets one full-row exchange serve the
     // whole chain (spreading by (t, chan) first moved the full rows
     // twice: q_pp3 1.7x slower at c4). Chains without kernels keep
-    // the scan's layout. A later averaging groupBy still pays its own
-    // exchange after RFI: the detection's MapGroups →
-    // SerializeFromObject re-emits `bl` as a fresh attribute, so no
-    // layout from before it carries over.
+    // the scan's layout. RFI's plan node outputs its input's own
+    // attributes, so its `bl` clustering carries on and a later
+    // averaging groupBy (keyed by a superset of `bl`) needs no
+    // exchange of its own.
     val spreadVis =
       if (axes.isEmpty || axes.exists(Layout.satisfies(vis, _: _*))) vis
       else Layout.clustered(vis, axes.last: _*)

@@ -2,7 +2,10 @@ package graft.ops
 
 import graft.functions.SumThresholdKernel
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
 
 /** R1 RFI detection (/root/reference/src/flags.rs:368-437).
   *
@@ -272,76 +275,59 @@ object RfiFlag {
     * (bl, t, chan)) would read the upstream frame twice and pay two
     * (bl, t, chan) exchanges; this shape reads it once and pays at
     * most one `bl` exchange (none over a bl-bucketed source, SCALE.md
-    * "Layout"). The price is the full row crossing the object
-    * boundary instead of just the detection cells.
+    * "Layout"). The rows stay binary: the [[RfiDetect]] plan node
+    * copies each baseline's rows, runs [[detectGroup]] and sets the
+    * `flag` bit in place. Its output is the input's own attributes, so
+    * the `bl` clustering carries on to averaging.
     *
     * `rfiBandpass`: optional (fc, pfb_gain) table dividing the
     * DETECTION amplitudes only (a Lua strategy's apply_bandpass; the
     * reference corrects the ImageSet copy, never the output) — the
     * emitted rows carry the ORIGINAL values, the gains shape only the
-    * `amps` the kernel sees.
+    * amplitudes the kernel sees.
     */
   def detectAndFlag(visFlagged: DataFrame, strategy: RfiStrategy,
                     rfiBandpass: Option[DataFrame] = None)
       : DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
     val ampCols = strategy.pols.map { p =>
       val (ri, ii) = RfiStrategy.PolComps(p)
       sqrt(col(s"v$ri") * col(s"v$ri") + col(s"v$ii") * col(s"v$ii"))
     }
-    // amps computed UP FRONT (codegen'd projection), original columns
-    // untouched; gain-divided when a detection bandpass is given:
+    val cols = visFlagged.columns.toSeq.map(col)
+    // gain-divided when a detection bandpass is given:
     // sqrt((re/g)^2 + (im/g)^2) = amp / g for g > 0
-    val withAmps = rfiBandpass match {
+    val (input, amps) = rfiBandpass match {
       case Some(pb) =>
-        visFlagged.join(broadcast(pb), Seq("fc"))
-          .withColumn("amps",
-            array(ampCols.map(_ / col("pfb_gain")): _*))
-          .drop("pfb_gain")
-          // the bandpass join must not reorder columns vs the input
-          .select((visFlagged.columns.map(col) :+ col("amps")).toSeq: _*)
-      case None => visFlagged.withColumn("amps", array(ampCols: _*))
+        // the bandpass join must not reorder columns vs the input
+        (visFlagged.join(broadcast(pb), Seq("fc"))
+          .select(cols :+ col("pfb_gain"): _*),
+          ampCols.map(_ / col("pfb_gain")))
+      case None => (visFlagged, ampCols)
     }
-    val inSchema = withAmps.schema
-    val outSchema = visFlagged.schema
-    val n = outSchema.length // amps is appended last; out drops it
-    val blI = inSchema.fieldIndex("bl")
-    val tI = inSchema.fieldIndex("t")
-    val chanI = inSchema.fieldIndex("chan")
-    val flagI = inSchema.fieldIndex("flag")
-    val ampsI = inSchema.fieldIndex("amps")
-    require(flagI < n && blI < n && tI < n && chanI < n,
-      "detectAndFlag: key/flag columns must precede the appended amps")
     // same `bl` axis as [[run]]; inside Preprocess the chain's
-    // up-front spread usually provides it already
-    Layout.clustered(withAmps, "bl").groupBy(col("bl"))
-      .as[Long, Row](Encoders.scalaLong, Encoders.row(inSchema))
-      .flatMapGroups { (bl: Long, it: Iterator[Row]) =>
-        val rows = it.toArray
-        val cells = rows.map { r =>
-          RfiCell(bl, r.getLong(tI), r.getLong(chanI),
-            r.getSeq[Double](ampsI), r.getBoolean(flagI))
-        }
-        val rfi = detectGroup(bl, cells, strategy)
-          .map(o => (o.t, o.chan) -> o.rfi).toMap
-        rows.iterator.map { r =>
-          val hit = rfi.getOrElse((r.getLong(tI), r.getLong(chanI)),
-            false)
-          val vals = new Array[Any](n)
-          var i = 0
-          while (i < n) { vals(i) = r.get(i); i += 1 }
-          if (hit) vals(flagI) = true
-          Row.fromSeq(scala.collection.immutable.ArraySeq
-            .unsafeWrapArray(vals))
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
+    // up-front spread usually provides it already. Asked for here, not
+    // left to the node's own requirement: AQE would coalesce that
+    // exchange onto a few tasks
+    val keyed = Layout.clustered(input, "bl")
+      .select(Seq("bl", "t", "chan", "flag").map(col) ++ amps: _*)
+      .queryExecution.analyzed
+    val Project(list, child) = keyed: @unchecked
+    val exprs = list.map {
+      case a: Alias => a.child
+      case e => e
+    }
+    val Seq(bl, t, chan, flag) = exprs.take(4).map(_.asInstanceOf[Attribute])
+    val spark = visFlagged.sparkSession
+    RfiDetect.Planning.setup(spark)
+    val flagged = GraftSqlShim.ofRows(spark,
+      RfiDetect(bl, t, chan, flag, exprs.drop(4), strategy, child))
+    if (rfiBandpass.isEmpty) flagged else flagged.select(cols: _*)
   }
 
   /** The per-baseline detection kernel on its own: grid assembly,
     * per-pol iterated background/SumThreshold, SIR post-extension.
-    * Shared by the batch `flatMapGroups` above and the streaming twin
-    * (graft.streaming.RfiStream), so both paths are the same code.
+    * Shared by [[run]], [[RfiDetect]] and the streaming twin
+    * (graft.streaming.RfiStream), so every path is the same code.
     */
   private[graft] def detectGroup(bl: Long, rows: Array[RfiCell],
                                  strategy: RfiStrategy)

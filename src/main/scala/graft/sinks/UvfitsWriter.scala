@@ -223,58 +223,59 @@ object UvfitsWriter {
             (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
           .toMap)
     }
-    // the writer scans the frame three times (channel extent, GCOUNT,
-    // encode) — cache it for the duration of the write so the upstream
-    // pipeline materialises ONCE, as MsContainer.write already does; at
-    // 100 TB the recompute would be 3x the dominant sink cost
+    // the writer scans the frame twice (metadata, encode) — cache it
+    // for the duration of the write so the upstream pipeline
+    // materialises ONCE, as MsContainer.write already does; at 100 TB
+    // the recompute would double the dominant sink cost
     val frame = avg.cache()
-    // channel slots are offsets from the lowest selected channel — a
-    // picket-fence or range-selected frame does not start at c_out = 0
-    val (cMinL, cMaxL) = {
-      val r = frame.agg(min("c_out"), max("c_out")).head()
-      (r.getLong(0), r.getLong(1))
+    // one metadata pass: channel slots are offsets from the lowest
+    // selected channel (a picket-fence or range-selected frame does
+    // not start at c_out = 0), and the row count sizes the encode
+    // parallelism (a fixed count would cap the dominant encode cost at
+    // scale)
+    val (cMinL, cMaxL, nRows) = {
+      val r = frame.agg(min("c_out"), max("c_out"), count(lit(1))).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     val cMin = cMinL.toInt
     val nChans = (cMaxL - cMinL + 1).toInt
-    // size-derived encode parallelism (frame is cached, the count is
-    // one cheap job); a fixed count would cap the dominant encode
-    // cost at scale
-    val encParts = Sinks.encodePartitions(spark, frame.count())
+    val encParts = Sinks.encodePartitions(spark, nRows)
     val ordered = frame
       .repartitionByRange(encParts, col("t_out"), col("bl"))
       .sortWithinPartitions("t_out", "bl", "c_out")
       .select("t_out", "bl", "ant1", "ant2", "c_out",
         "a0", "a1", "a2", "a3", "a4", "a5", "a6", "a7", "weight_out")
-
-    val nGroupEst = frame.select(countDistinct(struct("t_out", "bl")))
-      .head().getLong(0)
     val pcount = 6
     val floatsPerChan = 4 * 3 // pol x (re, im, wt)
     val groupFloats = pcount + nChans * floatsPerChan
 
-    val cards = Seq(
-      card("SIMPLE", "T", "conforms to FITS standard"),
-      card("BITPIX", "-32", "IEEE float32"),
-      card("NAXIS", "6"),
-      card("NAXIS1", "0", "random groups"),
-      card("NAXIS2", "3", "re, im, weight"),
-      card("NAXIS3", "4", "pols XX YY XY YX"),
-      card("NAXIS4", nChans.toString, "channels"),
-      card("NAXIS5", "1", "ra"),
-      card("NAXIS6", "1", "dec"),
-      card("EXTEND", "T"),
-      card("GROUPS", "T", "random group records"),
-      card("PCOUNT", pcount.toString, "UU VV WW DATE DATE BASELINE"),
-      card("GCOUNT", nGroupEst.toString, "number of groups"),
-      card("PTYPE1", "'UU      '"), card("PTYPE2", "'VV      '"),
-      card("PTYPE3", "'WW      '"), card("PTYPE4", "'DATE    '"),
-      card("PTYPE5", "'DATE    '"), card("PTYPE6", "'BASELINE'"),
-      card("OBJECT", "'GRAFT   '"),
-      card("TELESCOP", "'MWA     '"),
-      endCard)
-    val headerStr = cards.mkString
-    val header = (headerStr + " " * ((2880 - headerStr.length % 2880)
-      % 2880)).getBytes("ASCII")
+    // GCOUNT is the encode's own group count, so the header is built
+    // after it
+    def header(nGroups: Long): Array[Byte] = {
+      val cards = Seq(
+        card("SIMPLE", "T", "conforms to FITS standard"),
+        card("BITPIX", "-32", "IEEE float32"),
+        card("NAXIS", "6"),
+        card("NAXIS1", "0", "random groups"),
+        card("NAXIS2", "3", "re, im, weight"),
+        card("NAXIS3", "4", "pols XX YY XY YX"),
+        card("NAXIS4", nChans.toString, "channels"),
+        card("NAXIS5", "1", "ra"),
+        card("NAXIS6", "1", "dec"),
+        card("EXTEND", "T"),
+        card("GROUPS", "T", "random group records"),
+        card("PCOUNT", pcount.toString, "UU VV WW DATE DATE BASELINE"),
+        card("GCOUNT", nGroups.toString, "number of groups"),
+        card("PTYPE1", "'UU      '"), card("PTYPE2", "'VV      '"),
+        card("PTYPE3", "'WW      '"), card("PTYPE4", "'DATE    '"),
+        card("PTYPE5", "'DATE    '"), card("PTYPE6", "'BASELINE'"),
+        card("OBJECT", "'GRAFT   '"),
+        card("TELESCOP", "'MWA     '"),
+        endCard)
+      val headerStr = cards.mkString
+      (headerStr + " " * ((2880 - headerStr.length % 2880)
+        % 2880)).getBytes("ASCII")
+    }
 
     val gpsStart = gpsStartS
     val outStepS = intTimeS * avgTime
@@ -289,8 +290,8 @@ object UvfitsWriter {
 
     // per-partition slice encoding: each task streams its sorted rows
     // through the same group-flush state machine the serial writer used,
-    // into a part file; returns (partitionIdx, groupsWritten)
-    val partCounts: Array[(Int, Long)] = orderedRdd
+    // into a part file; returns its slice
+    val parts: Array[Part] = orderedRdd
       .mapPartitionsWithIndex { (idx, rows) =>
         val conf = sconf.value
         val partPath = new Path(s"$path.part$idx")
@@ -308,6 +309,7 @@ object UvfitsWriter {
         val out = new BufferedOutputStream(fs.create(tmpPath, true),
           1 << 20)
         var written = 0L
+        var first: (Long, Long) = null
         var curKey: (Long, Long) = null
         var curA1 = 0L
         var curA2 = 0L
@@ -365,6 +367,7 @@ object UvfitsWriter {
           val key = (r.getLong(0), r.getLong(1))
           if (key != curKey) {
             flush()
+            if (first == null) first = key
             curKey = key
             curT = r.getLong(0)
             curA1 = r.getLong(2)
@@ -388,14 +391,15 @@ object UvfitsWriter {
         out.close()
         FileContext.getFileContext(partPath.toUri, conf)
           .rename(tmpPath, partPath, Options.Rename.OVERWRITE)
-        Iterator((idx, written))
+        Iterator(Part(idx, written, Option(first), Option(curKey)))
       }
       .collect()
     uvwB.foreach(_.unpersist())
     frame.unpersist()
-    require(partCounts.length == actualParts,
-      s"uvfits partition invariant: ${partCounts.length} part results " +
+    require(parts.length == actualParts,
+      s"uvfits partition invariant: ${parts.length} part results " +
         s"for $actualParts partitions")
+    requireDisjointGroups(parts)
 
     // driver: header + ordered assembly of the slices + pad.
     // RangePartitioner orders partitions by key range, so part idx order
@@ -403,7 +407,7 @@ object UvfitsWriter {
     val conf = spark.sparkContext.hadoopConfiguration
     val outPath = new Path(path)
     val fs = outPath.getFileSystem(conf)
-    val written = partCounts.map(_._2).sum
+    val written = parts.map(_.groups).sum
     val dataBytes = written * groupFloats * 4
     val pad = ((2880 - dataBytes % 2880) % 2880).toInt
     val partPaths = (0 until actualParts).map { idx =>
@@ -432,7 +436,7 @@ object UvfitsWriter {
       val anPath = new Path(s"$path.an")
       try {
         val hout = fs.create(outPath, true)
-        hout.write(header)
+        hout.write(header(written))
         hout.close()
         val withPad = if (pad > 0) {
           val pout = fs.create(padPath, true)
@@ -470,7 +474,7 @@ object UvfitsWriter {
       lastAssemblyRoute = "stream"
       val out =
         new BufferedOutputStream(fs.create(outPath, true), 1 << 20)
-      out.write(header)
+      out.write(header(written))
       partPaths.foreach { p =>
         val in = fs.open(p)
         IOUtils.copyBytes(in, out, 1 << 20, false)
@@ -481,8 +485,29 @@ object UvfitsWriter {
       anBytes.foreach(out.write)
       out.close()
     }
-    require(written == nGroupEst,
-      s"uvfits row-count invariant: wrote $written, expected $nGroupEst")
     written
+  }
+
+  /** One encoded slice: its partition, the groups it wrote, and its
+    * first and last (t_out, bl) group keys (None when empty).
+    */
+  private[graft] final case class Part(idx: Int, groups: Long,
+                                       first: Option[(Long, Long)],
+                                       last: Option[(Long, Long)])
+
+  /** The group-count invariant: every group is written once iff no
+    * group straddles two slices. Each slice is sorted, so that holds
+    * when the first and last keys of the non-empty slices, in
+    * partition order, are strictly increasing.
+    */
+  private[graft] def requireDisjointGroups(parts: Seq[Part]): Unit = {
+    val ordering = Ordering.Tuple2[Long, Long]
+    parts.sortBy(_.idx).filter(_.groups > 0).sliding(2).foreach {
+      case Seq(a, b) =>
+        require(ordering.lt(a.last.get, b.first.get),
+          s"uvfits group invariant: part ${a.idx} ends at (t_out, bl) " +
+            s"${a.last.get} and part ${b.idx} starts at ${b.first.get}")
+      case _ =>
+    }
   }
 }

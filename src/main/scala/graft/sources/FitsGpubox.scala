@@ -94,6 +94,36 @@ object FitsGpubox {
     out.map { case (k, v) => k -> v.trim }.toMap
   }
 
+  /** The header starting at `pos`: its keyword map ([[headerCards]])
+    * and the position just past its last 2880-byte block (the data
+    * start). None when the file ends before the header's END card.
+    */
+  private[sources] def headerAt(rd: SlabIO.SlabReader, pos: Long)
+      : Option[(Map[String, String], Long)] = {
+    val header = Seq.newBuilder[String]
+    var ended = false
+    var hPos = pos
+    while (!ended && hPos + BlockSize <= rd.size) {
+      val text = new String(rd.readAt(hPos, BlockSize).array(), "ASCII")
+      (0 until BlockSize / CardSize).foreach { i =>
+        val card = text.substring(i * CardSize, (i + 1) * CardSize)
+        if (card.take(8).trim == "END") ended = true
+        else if (!ended) header += card
+      }
+      hPos += BlockSize
+    }
+    if (ended) Some((headerCards(header.result()), hPos)) else None
+  }
+
+  /** [[headerAt]], failing (naming `what`) when the header has no END. */
+  private[sources] def requireHeaderAt(rd: SlabIO.SlabReader, pos: Long,
+                                       what: String)
+      : (Map[String, String], Long) = {
+    val header = headerAt(rd, pos)
+    require(header.isDefined, s"unterminated $what header")
+    header.get
+  }
+
   /** Walk every HDU in the file: read header blocks to END, compute the
     * data-unit length from BITPIX/NAXISn, skip to the next HDU. An HDU
     * whose declared data unit extends past EOF (a transfer truncated
@@ -105,21 +135,8 @@ object FitsGpubox {
     val out = Seq.newBuilder[Hdu]
     var pos = 0L
     while (pos + BlockSize <= size) {
-      val header = Seq.newBuilder[String]
-      var ended = false
-      var hPos = pos
-      while (!ended && hPos + BlockSize <= size) {
-        val block = rd.readAt(hPos, BlockSize)
-        val text = new String(block.array(), "ASCII")
-        (0 until BlockSize / CardSize).foreach { i =>
-          val card = text.substring(i * CardSize, (i + 1) * CardSize)
-          if (card.take(8).trim == "END") ended = true
-          else if (!ended) header += card
-        }
-        hPos += BlockSize
-      }
-      if (!ended) return out.result() // trailing garbage — stop
-      val cards = headerCards(header.result())
+      // trailing garbage (no END) — stop
+      val (cards, hPos) = headerAt(rd, pos).getOrElse(return out.result())
       val bitpix = cards.getOrElse("BITPIX", "8").toInt
       val naxis = cards.getOrElse("NAXIS", "0").toInt
       val dataLen = if (naxis == 0) 0L
@@ -158,25 +175,15 @@ object FitsGpubox {
           s"HDU data ${h.dataLen} != expected ${slabFloats * 4}")
       }
       val iter = (0 until nTs).iterator.flatMap { t =>
-        val present = t < images.length
-        val slab: ByteBuffer = if (present)
+        // null: a missing slab, decoded as flagged zeros
+        val slab: ByteBuffer = if (t < images.length)
           rd.readAt(images(t).dataPos, slabFloats * 4)
             .order(ByteOrder.BIG_ENDIAN) // FITS data are big-endian
         else null
         pairs.iterator.zipWithIndex.flatMap { case ((a1, a2), blIdx) =>
           (0 until fpc).iterator.map { fc =>
-            val vals = new Array[Double](8)
-            if (present) {
-              val base = 4 * ((blIdx * fpc + fc) * 8)
-              var k = 0
-              while (k < 8) {
-                vals(k) = slab.getFloat(base + 4 * k).toDouble
-                k += 1
-              }
-            }
-            Row.fromSeq(Seq(t.toLong, a1.toLong, a2.toLong,
-              (a1 * nAnts + a2).toLong, cc, fc.toLong,
-              cc * fpc + fc) ++ vals.toSeq :+ !present)
+            GpuboxSource.cell(t, a1, a2, nAnts, cc, fc, fpc, slab,
+              4 * ((blIdx * fpc + fc) * 8))
           }
         }
       }

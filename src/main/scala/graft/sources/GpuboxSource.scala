@@ -4,6 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,6 +47,31 @@ object GpuboxSource {
     (0 until 8).map(k => StructField(s"v$k", DoubleType, nullable = false))
     :+ StructField("flag", BooleanType, nullable = false))
 
+  /** One decoded cell as a row of [[schema]]: the 8 visibility floats
+    * at byte `base` of `slab`, or zeros and `flag` for a missing slab
+    * (null). Shared by the GBX1 and FITS decoders; the row's 16 slots
+    * are filled in one array and wrapped once.
+    */
+  private[sources] def cell(t: Int, a1: Int, a2: Int, nAnts: Int,
+                            cc: Long, fc: Int, fpc: Int, slab: ByteBuffer,
+                            base: Int): Row = {
+    val v = new Array[Any](16)
+    v(0) = t.toLong
+    v(1) = a1.toLong
+    v(2) = a2.toLong
+    v(3) = (a1 * nAnts + a2).toLong
+    v(4) = cc
+    v(5) = fc.toLong
+    v(6) = cc * fpc + fc
+    var k = 0
+    while (k < 8) {
+      v(7 + k) = if (slab == null) 0.0 else slab.getFloat(base + 4 * k).toDouble
+      k += 1
+    }
+    v(15) = slab == null
+    new GenericRow(v)
+  }
+
   /** Antenna pairs (ant1 <= ant2) for n antennas, baseline-major order. */
   def antPairs(nAnts: Int): IndexedSeq[(Int, Int)] =
     for (a1 <- 0 until nAnts; a2 <- a1 until nAnts) yield (a1, a2)
@@ -78,25 +104,15 @@ object GpuboxSource {
       val availableSlabs =
         (((rd.size - headerBytes) / (slabFloats * 4L)).toInt).min(nTs)
       val iter = (0 until nTs).iterator.flatMap { t =>
-        val present = t < availableSlabs
-        val slab: ByteBuffer = if (present)
+        // null: a missing slab, decoded as flagged zeros
+        val slab: ByteBuffer = if (t < availableSlabs)
           rd.readAt(headerBytes + slabFloats * 4L * t, slabFloats * 4)
             .order(ByteOrder.LITTLE_ENDIAN)
         else null
         pairs.iterator.zipWithIndex.flatMap { case ((a1, a2), blIdx) =>
           (0 until fpc).iterator.map { fc =>
-            val vals = new Array[Double](8)
-            if (present) {
-              val base = 4 * ((blIdx * fpc + fc) * 8)
-              var k = 0
-              while (k < 8) {
-                vals(k) = slab.getFloat(base + 4 * k).toDouble
-                k += 1
-              }
-            }
-            Row.fromSeq(Seq(t.toLong, a1.toLong, a2.toLong,
-              (a1 * nAnts + a2).toLong, cc, fc.toLong,
-              cc * fpc + fc) ++ vals.toSeq :+ !present)
+            cell(t, a1, a2, nAnts, cc, fc, fpc, slab,
+              4 * ((blIdx * fpc + fc) * 8))
           }
         }
       }

@@ -37,33 +37,13 @@ object MwafReader {
   final case class Header(nChans: Int, nAnts: Int, nScans: Int,
                           dataStart: Long)
 
-  /** Parse one 2880-aligned card block starting at `pos`; returns the
-    * keyword map and the position just past the block (= data start).
+  /** Parse the header starting at `pos0`; returns the keyword map
+    * (string values unquoted, [[FitsGpubox.headerCards]]) and the
+    * position just past its last block (= data start).
     */
   def readCards(rd: SlabIO.SlabReader, pos0: Long)
-      : (Map[String, String], Long) = {
-    val cards = scala.collection.mutable.Map[String, String]()
-    var pos = pos0
-    var ended = false
-    while (!ended) {
-      require(pos + 2880 <= rd.size, "unterminated mwaf header")
-      val text = new String(rd.readAt(pos, 2880).array(), "ASCII")
-      (0 until 36).foreach { i =>
-        val card = text.substring(i * 80, (i + 1) * 80)
-        val key = card.take(8).trim
-        if (key == "END") ended = true
-        else if (!ended && card.length > 9 && card.charAt(8) == '=')
-          cards(key) = card.substring(10).takeWhile(_ != '/').trim
-      }
-      pos += 2880
-    }
-    (cards.toMap, pos)
-  }
-
-  /** Strip the FITS string-value quoting (`'FLAGS   '` → `FLAGS`). */
-  def strVal(v: String): String =
-    v.stripPrefix("'").reverse.dropWhile(_ == ' ').reverse
-      .stripSuffix("'").reverse.dropWhile(_ == ' ').reverse
+      : (Map[String, String], Long) =
+    FitsGpubox.requireHeaderAt(rd, pos0, "mwaf")
 
   /** Walk the extension HDUs to the one named `extname`; returns its
     * cards and data start.
@@ -75,7 +55,7 @@ object MwafReader {
       val (cards, dataStart) = readCards(rd, pos)
       val dataLen =
         cards("NAXIS1").toLong * cards("NAXIS2").toLong
-      if (cards.get("EXTNAME").map(strVal).contains(extname))
+      if (cards.get("EXTNAME").contains(extname))
         return (cards, dataStart)
       pos = dataStart + dataLen + ((2880 - dataLen % 2880) % 2880)
     }
@@ -88,7 +68,7 @@ object MwafReader {
     // the FLAGS BINTABLE is the first extension (reference
     // create_table order, mwaf.rs:434-440)
     val (ext, dataStart) = readCards(rd, afterPrimary)
-    require(ext.get("EXTNAME").map(strVal).contains("FLAGS"),
+    require(ext.get("EXTNAME").contains("FLAGS"),
       s"first mwaf extension is ${ext.get("EXTNAME")}, expected FLAGS")
     val h = Header(
       nChans = cards("NCHANS").toInt,

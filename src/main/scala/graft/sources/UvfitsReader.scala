@@ -41,12 +41,14 @@ object UvfitsReader {
   /** `uu`/`vv`/`ww`/`baseline` are parameter INDICES found via the
     * PTYPEn cards; `date1`/`date2` the first and second DATE parameter
     * (third-party writers order and count parameters differently — a
-    * fixed-index decode only reads back our own files).
+    * fixed-index decode only reads back our own files). `cards` holds
+    * every keyword of the primary header, string values unquoted.
     */
   final case class Header(pcount: Int, gcount: Long, nChans: Int,
                           dataStart: Long, uu: Int, vv: Int, ww: Int,
                           date1: Int, date2: Int, baseline: Int,
-                          pzero: Array[Double], pscal: Array[Double]) {
+                          pzero: Array[Double], pscal: Array[Double],
+                          cards: Map[String, String]) {
     /** Physical value of parameter `i` per the FITS random-groups
       * convention: PZEROn + PSCALn·raw. The identity case returns the
       * raw value UNTRANSFORMED so a file's -0.0f survives bit-exactly
@@ -59,27 +61,12 @@ object UvfitsReader {
 
   /** Parse the primary header (2880-byte card blocks up to END). */
   def readHeader(rd: SlabIO.SlabReader): Header = {
-    val cards = scala.collection.mutable.Map[String, String]()
-    var pos = 0L
-    var ended = false
-    while (!ended) {
-      require(pos + 2880 <= rd.size, "unterminated uvfits header")
-      val text = new String(rd.readAt(pos, 2880).array(), "ASCII")
-      (0 until 36).foreach { i =>
-        val card = text.substring(i * 80, (i + 1) * 80)
-        val key = card.take(8).trim
-        if (key == "END") ended = true
-        else if (!ended && card.length > 9 && card.charAt(8) == '=')
-          cards(key) = card.substring(10).takeWhile(_ != '/').trim
-      }
-      pos += 2880
-    }
+    val (cards, pos) = FitsGpubox.requireHeaderAt(rd, 0L, "uvfits")
     require(cards.get("GROUPS").exists(_.startsWith("T")),
       "not a random-groups uvfits file")
     val pcount = cards("PCOUNT").toInt
-    // PTYPEn values are quoted FITS strings, e.g. 'UU      '
     val ptypes = (1 to pcount).map { i =>
-      cards.getOrElse(s"PTYPE$i", "").replace("'", "").trim.toUpperCase
+      cards.getOrElse(s"PTYPE$i", "").toUpperCase
     }
     def param(name: String): Int = {
       val i = ptypes.indexWhere(_.startsWith(name))
@@ -102,7 +89,8 @@ object UvfitsReader {
       uu = param("UU"), vv = param("VV"), ww = param("WW"),
       date1 = d1, date2 = d2,
       baseline = param("BASELINE"),
-      pzero = pzero, pscal = pscal)
+      pzero = pzero, pscal = pscal,
+      cards = cards)
   }
 
   /** Decode groups [from, until) of the file into rows (one row per
@@ -173,34 +161,21 @@ object UvfitsReader {
       var result: Option[Seq[Row]] = None
       // walk extension HDUs until EXTNAME = 'AIPS AN'
       while (result.isEmpty && pos + 2880 <= rd.size) {
-        val cards = scala.collection.mutable.Map[String, String]()
-        var ended = false
-        while (!ended) {
-          require(pos + 2880 <= rd.size, "unterminated extension header")
-          val text = new String(rd.readAt(pos, 2880).array(), "ASCII")
-          (0 until 36).foreach { i =>
-            val card = text.substring(i * 80, (i + 1) * 80)
-            val key = card.take(8).trim
-            if (key == "END") ended = true
-            else if (!ended && card.length > 9 && card.charAt(8) == '=')
-              cards(key) = card.substring(10).takeWhile(_ != '/').trim
-          }
-          pos += 2880
-        }
+        val (cards, dataPos) = FitsGpubox.requireHeaderAt(rd, pos,
+          "extension")
+        pos = dataPos
         val rowLen = cards("NAXIS1").toInt
         val nRows = cards("NAXIS2").toInt
         val dataLen = rowLen.toLong * nRows +
           cards.getOrElse("PCOUNT", "0").toLong
-        val extName =
-          cards.getOrElse("EXTNAME", "").replace("'", "").trim
-        if (extName == "AIPS AN") {
+        if (cards.get("EXTNAME").contains("AIPS AN")) {
           // TTYPE/TFORM-driven column offsets (A/E/D/J supported)
           val tfields = cards("TFIELDS").toInt
           var off = 0
           val cols: Map[String, (Char, Int, Int)] =
             (1 to tfields).map { i =>
-              val name = cards(s"TTYPE$i").replace("'", "").trim
-              val form = cards(s"TFORM$i").replace("'", "").trim
+              val name = cards(s"TTYPE$i")
+              val form = cards(s"TFORM$i")
               // a bare TFORM letter means repeat 1 per the standard
               val repeat =
                 if (form.length > 1) form.init.toInt else 1

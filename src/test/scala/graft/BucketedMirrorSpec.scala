@@ -72,10 +72,10 @@ class BucketedMirrorSpec extends AnyFunSuite with BeforeAndAfterAll {
         pp(vv = false), Seq(1, 0, 1)),
       ("per-layout final-plan shuffles of Preprocess(rfi) + avg 2x2",
         df => Averaging.avgTimeFreq(pp(vv = false)(df), 2, 2),
-        Seq(2, 1, 2)),
+        Seq(1, 0, 1)),
       ("per-layout final-plan shuffles of Preprocess(vv, rfi) + avg 2x2",
         df => Averaging.avgTimeFreq(pp(vv = true)(df), 2, 2),
-        Seq(5, 3, 2)))
+        Seq(4, 2, 1)))
 
   private lazy val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
     VisSynth.vis(spark, "/root/testdata/sf0.001"),

@@ -107,6 +107,31 @@ class MwafSpec extends AnyFunSuite {
     }
   }
 
+  test("mwaf header: a quoted value holding '/' reads back exactly") {
+    import spark.implicits._
+    val vis = Seq((0L, 0L, 0L, 3L, true))
+      .toDF("cc", "bl", "t", "fc", "flag")
+    val dir = Files.createTempDirectory("mwaf_slash").toString
+    MwafWriter.write(vis, dir)
+    val path = Paths.get(s"$dir/flags_0.mwaf")
+    // rewrite the SOFTWARE card of the primary header in place
+    val bytes = Files.readAllBytes(path)
+    val at = new String(bytes.take(2880), "ASCII").indexOf("SOFTWARE=")
+    assert(at >= 0 && at % 80 == 0)
+    "SOFTWARE= 'graft/birli' / writer".padTo(80, ' ').getBytes("ASCII")
+      .copyToArray(bytes, at)
+    Files.write(path, bytes)
+    // the local filesystem's checksum would now refuse the patched file
+    Files.deleteIfExists(path.resolveSibling(".flags_0.mwaf.crc"))
+    val rd = new graft.sources.SlabIO.SlabReader(path.toString,
+      spark.sparkContext.hadoopConfiguration)
+    val (cards, _) = try graft.sources.MwafReader.readCards(rd, 0L)
+      finally rd.close()
+    assert(cards("SOFTWARE") == "graft/birli")
+    assert(cards("VERSION") == "2.0")
+    assert(graft.sources.MwafReader.read(spark, dir).count() > 0)
+  }
+
   test("mwaf extensions are standard-conforming FITS BINTABLEs " +
     "(mandatory cards, reference column names/types)") {
     val dir = Files.createTempDirectory("mwaf_cards").toString
@@ -118,7 +143,7 @@ class MwafSpec extends AnyFunSuite {
     val rd = new graft.sources.SlabIO.SlabReader(s"$dir/flags_0.mwaf",
       conf)
     try {
-      import graft.sources.MwafReader.{findExt, strVal}
+      import graft.sources.MwafReader.findExt
       // every extension: the BINTABLE mandatory-card set in the
       // standard's order semantics (astropy-parseable), EXTNAME, and
       // the reference's TTYPE/TFORM pairs (mwaf.rs:547-624)
@@ -131,16 +156,16 @@ class MwafSpec extends AnyFunSuite {
         "TILES" -> Seq(("Antenna", "1J"), ("TileName", "8A")))
       expect.foreach { case (extname, fields) =>
         val (cards, _) = findExt(rd, extname)
-        assert(strVal(cards("XTENSION")) == "BINTABLE", extname)
+        assert(cards("XTENSION") == "BINTABLE", extname)
         assert(cards("BITPIX").toInt == 8, extname)
         assert(cards("NAXIS").toInt == 2, extname)
         assert(cards("PCOUNT").toInt == 0, extname)
         assert(cards("GCOUNT").toInt == 1, extname)
         assert(cards("TFIELDS").toInt == fields.length, extname)
         fields.zipWithIndex.foreach { case ((ttype, tform), i) =>
-          assert(strVal(cards(s"TTYPE${i + 1}")) == ttype,
+          assert(cards(s"TTYPE${i + 1}") == ttype,
             s"$extname TTYPE${i + 1}")
-          assert(strVal(cards(s"TFORM${i + 1}")) == tform,
+          assert(cards(s"TFORM${i + 1}") == tform,
             s"$extname TFORM${i + 1}")
         }
       }

@@ -47,6 +47,23 @@ class SkewAndExtensionsSpec extends AnyFunSuite {
       .collect().map(_.getDouble(0)).toSeq == Seq(0.0, 8.0))
   }
 
+  test("a second float_dot/double_dot register leaves the builder in " +
+    "place") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    Seq[(String, SparkSession => Unit)](
+      "float_dot" -> graft.functions.FloatVecDot.register,
+      "double_dot" -> graft.functions.DoubleVecDot.register).foreach {
+      case (name, register) =>
+        register(spark)
+        val first = registry.lookupFunctionBuilder(FunctionIdentifier(name))
+        assert(first.isDefined, name)
+        register(spark)
+        val second = registry.lookupFunctionBuilder(FunctionIdentifier(name))
+        assert(second.exists(_ eq first.get), s"$name was re-registered")
+    }
+  }
+
   test("saltedCount equals plain count") {
     import spark.implicits._
     val df = (1 to 1000).map(i => (i % 7, i)).toDF("k", "v")

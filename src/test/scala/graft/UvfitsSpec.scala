@@ -52,6 +52,85 @@ class UvfitsSpec extends AnyFunSuite {
     assert(frac >= 0.0f && frac < 1.0f)
   }
 
+  test("uvfits write runs one aggregate and one encode over its input") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
+      VisSynth.vis(spark, "/root/testdata/sf0.001"), Dims.timestep(spark),
+      Dims.chan(spark), Dims.baseline(spark)))
+    val avg = Averaging.avgTimeFreq(weighted, 2, 2)
+    // listener events arrive in order on one queue: the sentinel's
+    // event marks the end of the writer's
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val plans = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution,
+                             ns: Long): Unit = seen.add(
+        if (plans.find(qe.executedPlan)(_.nodeName == "Range").nonEmpty)
+          "sentinel"
+        else if (plans.find(qe.executedPlan)(
+          _.nodeName.contains("Aggregate")).nonEmpty) s"$name: aggregate"
+        else s"$name: no aggregate")
+      override def onFailure(name: String, qe: QueryExecution,
+                             e: Exception): Unit = seen.add(s"$name: failed")
+    }
+    val tmp = Files.createTempDirectory("uvq").toString + "/q.uvfits"
+    spark.listenerManager.register(listener)
+    val events = try {
+      UvfitsWriter.write(avg, tmp)
+      spark.range(1).collect()
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(e => e != null && e != "sentinel").toList
+    } finally spark.listenerManager.unregister(listener)
+    // the metadata pass, then the encode (`Dataset.rdd`)
+    assert(events == List("head: aggregate", "rdd: no aggregate"), events)
+  }
+
+  test("part boundaries: a group straddling two parts, or parts out " +
+    "of order, fail and name both parts") {
+    import UvfitsWriter.{Part, requireDisjointGroups}
+    def part(idx: Int, first: (Long, Long), last: (Long, Long)) =
+      Part(idx, 2, Some(first), Some(last))
+    val empty = Part(1, 0, None, None)
+    // disjoint, with an empty part between
+    requireDisjointGroups(Seq(part(0, (0, 0), (0, 5)), empty,
+      part(2, (0, 6), (1, 3))))
+    val straddle = intercept[IllegalArgumentException](
+      requireDisjointGroups(Seq(part(0, (0, 0), (0, 5)), empty,
+        part(2, (0, 5), (1, 3)))))
+    assert(straddle.getMessage.contains("part 0") &&
+      straddle.getMessage.contains("part 2"), straddle.getMessage)
+    val outOfOrder = intercept[IllegalArgumentException](
+      requireDisjointGroups(Seq(part(0, (1, 0), (1, 5)),
+        part(1, (0, 0), (0, 7)))))
+    assert(outOfOrder.getMessage.contains("part 0") &&
+      outOfOrder.getMessage.contains("part 1"), outOfOrder.getMessage)
+  }
+
+  test("uvfits header: a quoted value holding '/' reads back exactly") {
+    val weighted = WeightOps.flagToWeight(FlagOps.setFlags(
+      VisSynth.vis(spark, "/root/testdata/sf0.001"), Dims.timestep(spark),
+      Dims.chan(spark), Dims.baseline(spark)))
+    val tmp = Files.createTempDirectory("uvobj").toString + "/o.uvfits"
+    val n = UvfitsWriter.write(Averaging.avgTimeFreq(weighted, 2, 2), tmp)
+    // rewrite the OBJECT card in place
+    val bytes = Files.readAllBytes(Paths.get(tmp))
+    val at = new String(bytes.take(2880), "ASCII").indexOf("OBJECT  =")
+    assert(at >= 0 && at % 80 == 0)
+    "OBJECT  = 'A/B'".padTo(80, ' ').getBytes("ASCII")
+      .copyToArray(bytes, at)
+    Files.write(Paths.get(tmp), bytes)
+    // the local filesystem's checksum would now refuse the patched file
+    Files.deleteIfExists(Paths.get(tmp).resolveSibling(".o.uvfits.crc"))
+    val rd = new graft.sources.SlabIO.SlabReader(tmp,
+      spark.sparkContext.hadoopConfiguration)
+    val h = try graft.sources.UvfitsReader.readHeader(rd) finally rd.close()
+    assert(h.cards("OBJECT") == "A/B")
+    assert(h.cards("TELESCOP") == "MWA")
+    assert(h.gcount == n)
+  }
+
   test("encode-parallelism invariance: an encodePartitions override " +
     "yields a byte-identical uvfits file (slice offsets are computed, " +
     "not partition-relative)") {
