@@ -1203,8 +1203,8 @@ object SparkEntry {
   // NOTE (r22, measured-and-reverted): a scale-adaptive scan spread
   // here (hash-repartition on the unique id to defaultParallelism
   // when the scan is narrower — the fixture corpora are single-
-  // row-group files, so heavy per-doc stages run as 1-task jobs,
-  // JobProbe evidence in OPTIMIZATION_r22.md) measured SLOWER on
+  // row-group files, so heavy per-doc stages run as 1-task jobs)
+  // measured SLOWER on
   // every llm gate at sf0.1/c32: doc 3.8→5.1 s, curation 6.0→6.9,
   // d6 2.8→3.3, sim8 4.7→4.9. The composed pipelines already overlap
   // their single-task stages from driver threads, and the extra

@@ -30,9 +30,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *    0.0 in element order — [[DoubleVecDot]]'s fold over the slice;
   *  - terms combine left-to-right exactly as `Seq(...).reduce(_ + _)`:
   *    (cellDot) + d0 + d1 + …;
-  *  - the final score is `round6(sum / divisor)` — Spark RoundBase's
-  *    DoubleType branch verbatim (HALF_UP via BigDecimal, NaN/Inf
-  *    passthrough), the same `round(x, 6)` the SQL form applied.
+  *  - the final score is `round(sum / divisor, 6)` through
+  *    [[HalfUp.round]], which returns Spark RoundBase's DoubleType
+  *    result (BigDecimal HALF_UP, NaN/Inf passthrough) bit for bit
+  *    without a BigDecimal per score — the same `round(x, 6)` the SQL
+  *    form applied;
   *  - NULL semantics: any NULL child yields NULL — identical to the
   *    replaced chain, where slice/element_at/double_dot/+/round all
   *    propagate null.
@@ -49,11 +51,6 @@ final class AdcScoreKernel(val books: Array[Array[Array[Double]]],
   // unbounded UnsafeArrayData getters must never read short vectors)
   private val minElems = math.max(m * subDim,
     if (cents == null) 0 else cents.iterator.map(_.length).max)
-
-  private def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** cell is ignored when the kernel carries no centroids. */
   def score(v: ArrayData, cell: Int, codes: Array[Int]): Double = {
@@ -78,7 +75,7 @@ final class AdcScoreKernel(val books: Array[Array[Array[Double]]],
       acc += s
       si += 1
     }
-    round6(acc / divisor)
+    HalfUp.round(acc / divisor, 6)
   }
 }
 

@@ -32,15 +32,16 @@ import org.apache.spark.sql.types._
   *    order — bit-identical to [[DoubleVecDot]] / [[FloatVecDot]]
   *    (floats widen exactly, so pre-widened double codewords give
   *    identical products);
-  *  - the score is `round((acc − halfNorm) / divisor, 6)` with
-  *    Spark's own double rounding (BigDecimal.valueOf → setScale
-  *    HALF_UP → doubleValue, NaN/Inf passthrough) — [[CellTopKKernel.round6]]
-  *    replicates RoundBase's DoubleType branch exactly; divisor 1.0
-  *    reproduces the undivided float-family form (x/1.0 == x bitwise);
+  *  - the score is `round((acc − halfNorm) / divisor, 6)` through
+  *    [[HalfUp.round]], which returns Spark RoundBase's DoubleType
+  *    result (BigDecimal HALF_UP, NaN/Inf passthrough) bit for bit
+  *    without a BigDecimal per score; divisor 1.0 reproduces the
+  *    undivided float-family form (x/1.0 == x bitwise);
   *  - output is the ascending (ns = −score, cid) prefix of length
   *    `nTop` — exactly `slice(array_sort(...), 1, nTop)`: scores are
-  *    never −0.0 (BigDecimal rounding normalises), so negation cannot
-  *    split a tie and plain double comparison matches the struct sort.
+  *    never −0.0 (Spark's rounding normalises a zero to +0.0), so
+  *    negation cannot split a tie and plain double comparison
+  *    matches the struct sort.
   *
   * Documented parity GAPS vs the replaced SQL form (ADVICE r21) —
   * both unreachable on the gated corpora (non-null, finite, dim-64
@@ -78,12 +79,6 @@ final class CellTopKKernel(val cids: Array[Int],
   // row in topK (ADVICE r21)
   private val minElems = offset + mat.iterator.map(_.length).max
 
-  /** Spark RoundBase's DoubleType branch, verbatim semantics. */
-  private def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   def topK(v: ArrayData): ArrayData = {
     require(v.numElements() >= minElems,
       s"cell_topk: input vector has ${v.numElements()} elements, " +
@@ -104,7 +99,7 @@ final class CellTopKKernel(val cids: Array[Int],
         }
       else
         while (i < n) { s += v.getDouble(offset + i) * row(i); i += 1 }
-      val ns = -round6((s - halfNorms(c)) / divisor)
+      val ns = -HalfUp.round((s - halfNorms(c)) / divisor, 6)
       // bounded ascending insertion; strict < keeps the earlier
       // (smaller) cid ahead on equal ns
       if (filled < nTop || ns < topNs(filled - 1)) {

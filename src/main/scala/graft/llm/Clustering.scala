@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.MicroQuant
 import graft.llm.TextExprs._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -20,7 +21,10 @@ import org.apache.spark.sql.functions._
   *    (`round(x * 1e6)`): every partial sum stays far below 2^53, so
   *    double addition never rounds and the per-cell centroid sums are
   *    bit-identical under ANY partitioning, task order, speculative
-  *    re-execution, or AQE re-plan;
+  *    re-execution, or AQE re-plan. Spark computes it with one
+  *    codegen'd [[graft.functions.MicroQuant]] node (the [[quantSql]]
+  *    value bit for bit, rounded by [[graft.functions.HalfUp]]);
+  *    DuckDB runs the [[quantSql]] text;
   *  - centroid components are the exact rational S_d / n evaluated once
   *    as an IEEE double division — both engines produce the identical
   *    correctly-rounded double;
@@ -41,7 +45,9 @@ object Clustering {
 
   /** Micro-unit quantisation of an array<float> embedding: integer
     * values held in doubles, so downstream SUMs are exact (see class
-    * doc). Identical text/semantics in both dialects.
+    * doc). Identical text/semantics in both dialects; the DuckDB twins
+    * build SQL from it, Spark's own call sites use
+    * [[graft.functions.MicroQuant]], its bit-identical node.
     */
   def quantSql(v: String)(implicit d: Dialect): String =
     listTransform(v, x => s"round(CAST($x AS DOUBLE) * 1000000.0)")
@@ -92,9 +98,8 @@ object Clustering {
     */
   def train(emb: DataFrame, k: Int, iters: Int,
             dim: Int): Array[(Int, Array[Double])] = {
-    implicit val d: Dialect = SparkD
     val embq = emb
-      .select(col("vec_id"), expr(quantSql("embedding")).as("qv"))
+      .select(col("vec_id"), MicroQuant(col("embedding")).as("qv"))
       .cache()
     try trainQ(embq, k, iters, dim)
     finally embq.unpersist(false)
@@ -129,11 +134,10 @@ object Clustering {
     */
   def kmeansAssign(emb: DataFrame, k: Int = 8, iters: Int = 3,
                    dim: Int = 64): DataFrame = {
-    implicit val d: Dialect = SparkD
     val cents = train(emb, k, iters, dim)
     val top = element_at(cellSort(cents), 1)
     emb
-      .select(col("vec_id"), expr(quantSql("embedding")).as("qv"))
+      .select(col("vec_id"), MicroQuant(col("embedding")).as("qv"))
       .withColumn("top", top)
       .select(col("vec_id"),
         col("top").getField("cid").cast("bigint").as("cell"),
@@ -164,7 +168,7 @@ object Clustering {
     implicit val d: Dialect = SparkD
     emb
       .select(col("vec_id"), col("embedding"),
-        expr(quantSql("embedding")).as("qv"))
+        MicroQuant(col("embedding")).as("qv"))
       .withColumn("cell", element_at(cellSort(cents), 1)
         .getField("cid").cast("bigint"))
       .withColumn("nrm", expr(Similarity.normSql("embedding")))
@@ -302,7 +306,7 @@ object Clustering {
     import org.apache.spark.sql.expressions.Window
     val cents = train(emb, k, iters, dim)
     val asg = emb
-      .select(col("vec_id"), expr(quantSql("embedding")).as("qv"))
+      .select(col("vec_id"), MicroQuant(col("embedding")).as("qv"))
       .withColumn("cell", element_at(cellSort(cents), 1)
         .getField("cid").cast("bigint"))
       .withColumn("h", expr(hex8ToLong(toStr("vec_id"))))

@@ -425,11 +425,9 @@ object Similarity {
   private val MicroScale = 1.0e12
 
   /** The micro-unit projection `(vec_id, qv)` every trained model reads. */
-  private def quantised(emb: DataFrame): DataFrame = {
-    implicit val d: Dialect = SparkD
+  private def quantised(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
-      expr(Clustering.quantSql("embedding")).as("qv"))
-  }
+      graft.functions.MicroQuant(col("embedding")).as("qv"))
 
   /** The model state of an IVF-PQ index: coarse centroids, per-subspace
     * codebooks and, for residual encoding, the centroids snapped to the

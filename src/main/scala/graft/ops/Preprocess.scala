@@ -131,9 +131,18 @@ case class Preprocess(vanVleck: Boolean = false,
     * uses — exposed so the uvfits/MS sinks can write group parameters
     * CONSISTENT with the phases the geometry stage tracked (a sink
     * computing its own default-centre table would emit UVW
-    * inconsistent with the rotated DATA).
+    * inconsistent with the rotated DATA). Built once per session and
+    * shared: the apparent table is a driver pass of the IAU-2006 chain
+    * behind two collects, which the stage and the sink would
+    * otherwise each pay.
     */
-  def uvwTable(spark: SparkSession): DataFrame = {
+  def uvwTable(spark: SparkSession): DataFrame =
+    uvwTables.computeIfAbsent(spark, s => buildUvwTable(s))
+
+  @transient private lazy val uvwTables =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
+
+  private def buildUvwTable(spark: SparkSession): DataFrame = {
     val (raC, decC) = phaseCentre.getOrElse(
       (GeometryCorrection.AppRaJ2000, GeometryCorrection.AppDecJ2000))
     val (lonA, latA) = arrayPos.getOrElse(

@@ -30,11 +30,8 @@ object ResampleStream {
   val BucketSec: Long = 3600L
   private val BucketUs = BucketSec * 1000000L
 
-  /** Round matching the batch operator's round(sum, 4) (half-up, as
-    * Spark's round).
-    */
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** The batch operator's round(sum, 4): Spark's double rounding. */
+  private def r4(x: Double): Double = graft.functions.HalfUp.round(x, 4)
 
   /** Pure per-group transition: emit all buckets strictly before the
     * newest event's bucket; keep the newest open in state.
