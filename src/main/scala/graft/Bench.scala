@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * warmup job absorbs JVM/codegen startup so per-query numbers measure
   * the plan, not classloading.
   *
-  * Methodology (matches the QBench dev tool so round-over-round and
-  * spot-check numbers are comparable): each query runs
+  * Methodology (matches `tools/Profile`, so its per-query walls and
+  * the suite's are comparable): each query runs
   * SPARK_GRAFT_BENCH_RUNS + 1 times BACK-TO-BACK — the first run is a
   * warm-up DISCARD (it pays that query's codegen/classload/page-cache
   * cost) and the median of the remaining runs is reported. The earlier
@@ -36,8 +36,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Contamination guard (the no-min-folding rule must not launder
   * INFLATED figures either): every fork records /proc/loadavg
-  * before/after into the artifact. IdleConverge measured steady-state
-  * fresh-JVM cost at or below the warm-suite figure from run 2, and
+  * before/after into the artifact. Repeated runs in one fresh JVM
+  * (BENCH_NOTES round-17) measured steady-state fresh-JVM cost at or
+  * below the warm-suite figure from run 2, and
   * runOne discards two runs — so an idle figure > 1.3x its suite
   * figure is machine-load contamination by definition. The harness
   * waits (bounded, shared global budget) for external CPU
@@ -81,7 +82,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def sessionFor(cpus: String): SparkSession = {
+  private[graft] def sessionFor(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -115,7 +116,7 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
@@ -226,8 +227,8 @@ object Bench {
   /** Child-process mode: measure ONE query in this (idle) JVM and
     * print a marker line the parent parses. A fresh JVM is JIT-cold
     * (first execution ~3x, second still ~1.2x); two discards + median
-    * of >=3 timed runs converges to the steady state the judge's
-    * QBench spot-checks measure.
+    * of >=3 timed runs converges to the steady state a fresh
+    * `tools/Profile` run measures.
     */
   private def runOne(name: String, sfDir: String, cpus: String,
                      runs: Int): Unit = {
@@ -434,8 +435,8 @@ object Bench {
     val ordered = SparkEntry.queries.keys.toSeq.sorted
     // idle-JVM spot-check config: re-measure every query over the
     // threshold (plus at minimum the 5 slowest) in fresh processes —
-    // fresh-JVM cost is the number the judge's own QBench re-runs
-    // measure, free of 100+ queries of accumulated
+    // fresh-JVM cost is the number a fresh `tools/Profile` run
+    // measures, free of 100+ queries of accumulated
     // code-cache/GC/page-cache state
     // 3.0, not the old 1.5: at 137 gates a 1.5 s threshold nominates
     // ~38 candidates, and one heavyweight fork costs ~100 s — the
@@ -444,7 +445,7 @@ object Bench {
     // 3.0 s covers every headline-dominating entry AND is a set the
     // budget can actually get through (r20 measured: 9 processed in
     // the leftover ~800 s); a 1.5-3 s entry's warm-suite figure is
-    // the steady state anyway (IdleConverge, BENCH_NOTES round-17).
+    // the steady state anyway (BENCH_NOTES round-17).
     val idleThresholdSec = sys.env
       .getOrElse("SPARK_GRAFT_IDLE_THRESHOLD", "3.0").toDouble
     // suite results accumulate here so the artifact can be (re)emitted
@@ -468,7 +469,7 @@ object Bench {
     // `"basis":"suite"` — an explicitly-labelled warm-suite number is
     // honest, a load-inflated "idle" number is not. All attempts stay
     // in the artifact either way.
-    // 1.3, not the old 2.5: IdleConverge measured steady-state
+    // 1.3, not the old 2.5: BENCH_NOTES round-17 measured steady-state
     // fresh-JVM cost AT OR BELOW the warm-suite figure from run 2,
     // and runOne discards two runs — so an idle figure materially
     // above its own suite figure is machine-load contamination BY

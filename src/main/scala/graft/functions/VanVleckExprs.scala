@@ -30,9 +30,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * bin-lock convoys; the kernel is pure, so any cache policy is
   * result-identical (retry-safe, engine-exact).
   */
-final class VanVleckCrossMemo(val refCap: Boolean) extends Serializable {
+final class VanVleckCrossMemo extends Serializable {
 
-  /** Measured key space (graft.tools.VvProbe at sf0.1): 4.35M probes
+  /** Measured key space (sf0.1, round 22; the probe that counted it
+    * was retired, the figures stand as recorded here): 4.35M probes
     * per preprocess-chain execution over 920,898 DISTINCT (khat, sx,
     * sy) triples (1997 khats × 1778 σ pairs realised); one task
     * thread's share is ~8–40k distinct. Two tiers follow from that:
@@ -56,21 +57,19 @@ final class VanVleckCrossMemo(val refCap: Boolean) extends Serializable {
     * a pure function of the bits, so a hit returns the identical
     * double a miss would compute — retry-safe, engine-exact.
     */
-  // ALL memo state is JVM-STATIC (held by the companion, keyed by the
-  // cap policy), NEVER instance state: this instance rides the plan's
-  // references array into every serialized task binary, so instance
-  // fields would deserialise as a FRESH copy per task — fresh 4 MB L1
+  // ALL memo state is JVM-STATIC (held by the companion), NEVER
+  // instance state: this instance rides the plan's references array
+  // into every serialized task binary, so instance fields would
+  // deserialise as a FRESH copy per task — fresh 4 MB L1
   // arrays allocated+zeroed per task, no sharing even within a thread
   // (measured: 14× slower than the static shared map on
   // q_c5_van_vleck). The static state is identical for every
-  // deserialised copy with the same refCap — results depend only on
-  // the pure kernel, so JVM-wide sharing is correctness-neutral.
-  private def state: VanVleckCrossMemo.State =
-    VanVleckCrossMemo.stateFor(refCap)
+  // deserialised copy — results depend only on the pure kernel, so
+  // JVM-wide sharing is correctness-neutral.
 
   /** Memoised [[VanVleckKernel.vanVleckCrossInt]] — bit-exact. */
   def cross(k: Double, x: Double, y: Double): Double =
-    state.cross(k, x, y, refCap)
+    VanVleckCrossMemo.state.cross(k, x, y)
 }
 
 object VanVleckCrossMemo {
@@ -84,7 +83,7 @@ object VanVleckCrossMemo {
     h ^ (h >>> 31)
   }
 
-  /** JVM-static two-tier memo state (one per cap policy). */
+  /** JVM-static two-tier memo state. */
   private[functions] final class State {
     /** Per-thread L1: open addressing on raw bits, zero allocation,
       * zero sharing. 2^17 slots ≈ 4.2 MB/thread, insert cap 75%.
@@ -124,8 +123,7 @@ object VanVleckCrossMemo {
       new java.util.concurrent.atomic.LongAdder
     private val SharedCap = 4L << 20
 
-    def cross(k: Double, x: Double, y: Double,
-              refCap: Boolean): Double = {
+    def cross(k: Double, x: Double, y: Double): Double = {
       val t = tls.get()
       val kb = java.lang.Double.doubleToRawLongBits(k)
       val xb = java.lang.Double.doubleToRawLongBits(x)
@@ -144,7 +142,7 @@ object VanVleckCrossMemo {
           // compute OUTSIDE any lock; racing threads may duplicate
           // the integration (identical result - pure function), the
           // winner's entry stays
-          val c = VanVleckKernel.vanVleckCrossInt(k, x, y, refCap)
+          val c = VanVleckKernel.vanVleckCrossInt(k, x, y)
           if (sharedSize.sum() < SharedCap &&
               shared.putIfAbsent(key,
                 java.lang.Double.valueOf(c)) == null)
@@ -160,20 +158,20 @@ object VanVleckCrossMemo {
     }
   }
 
-  private val stateTrue = new State
-  private val stateFalse = new State
-  private[functions] def stateFor(refCap: Boolean): State =
-    if (refCap) stateTrue else stateFalse
+  private[functions] val state = new State
 
-  /** One shared memo per cap policy: every plan's expression carries
-    * the same reference object, so generated sources are identical
-    * across gates/iterations (janino caches the plan shape) and the
+  /** The benchmark (perfbench/src/Main.scala `memoEntries`) reads the
+    * shared tier's size reflectively through this name and signature;
+    * the argument selects nothing.
+    */
+  private[functions] def stateFor(ignored: Boolean): State = state
+
+  /** The one shared memo: every plan's expression carries the same
+    * reference object, so generated sources are identical across
+    * gates/iterations (janino caches the plan shape) and the
     * per-thread tables warm once per JVM, not once per query.
     */
-  val refCapTrue = new VanVleckCrossMemo(true)
-  val refCapFalse = new VanVleckCrossMemo(false)
-  def forPolicy(refCap: Boolean): VanVleckCrossMemo =
-    if (refCap) refCapTrue else refCapFalse
+  val instance = new VanVleckCrossMemo
 }
 
 /** κ̂ → κ cross dequantisation as a ternary codegen expression.
@@ -243,10 +241,10 @@ case class VanVleckAuto(child: Expression) extends UnaryExpression {
 
 object VanVleckExprs {
   /** Column builders for the ops layer. */
-  def cross(refCap: Boolean)(k: Column, sx: Column, sy: Column): Column =
+  def cross(k: Column, sx: Column, sy: Column): Column =
     GraftSqlShim.column(VanVleckCross(
       GraftSqlShim.expression(k), GraftSqlShim.expression(sx),
-      GraftSqlShim.expression(sy), VanVleckCrossMemo.forPolicy(refCap)))
+      GraftSqlShim.expression(sy), VanVleckCrossMemo.instance))
 
   def auto(s: Column): Column =
     GraftSqlShim.column(VanVleckAuto(GraftSqlShim.expression(s)))

@@ -117,19 +117,11 @@ object VanVleckKernel {
     * guard failure (mirrors van_vleck_crosses_int's unwrap_or,
     * van_vleck.rs:736-748).
     *
-    * Iteration-cap policy: at the 100-iteration cap the reference
-    * abandons the cell to khat (van_vleck.rs:745), and that is the
-    * DEFAULT here — a reference-matching engine must be reference-
-    * faithful out of the box. Pass `referenceCapFallback = false` to
-    * instead ACCEPT the iterate when its residual is sub-nano
-    * (|δ| ≤ 1e-9): the accept-vs-cap decision is a knife edge
-    * different libm builds land on different sides of, and the
-    * acceptance makes the result engine-stable where the reference's
-    * rule is build-dependent.
+    * Iteration cap: at 100 iterations the cell is abandoned to khat,
+    * as the reference does (van_vleck.rs:745).
     */
   def vanVleckCrossInt(khat: Double, sigmaX: Double,
-                       sigmaY: Double,
-                       referenceCapFallback: Boolean = true): Double = {
+                       sigmaY: Double): Double = {
     if (sigmaX <= 0.0 || sigmaY <= 0.0) return khat
     val sign = math.signum(khat)
     val k = math.abs(khat)
@@ -202,19 +194,7 @@ object VanVleckKernel {
       guess = step
       delta = simpP(guess) - k
       count += 1
-      // At the cap, accept the iterate when the residual is sub-nano:
-      // near the ρ→1 boundary Newton falls into a slowly-damping
-      // 2-cycle whose |δ| may cross 1e-12 at iteration ~100±few — a
-      // knife edge that different exp() implementations land on
-      // different sides of. |δ| ≤ 1e-9 means the root is pinned to
-      // ~1e-13 in ρ (invisible at the 6-dp output), so returning it
-      // beats the reference's khat fallback (van_vleck.rs:745), which
-      // abandons the dequantisation entirely; cells with a genuinely
-      // lost root still fall back.
-      if (count > 100)
-        return if (!referenceCapFallback && math.abs(delta) <= 1e-9)
-          sign * guess * sigmaX * sigmaY
-        else khat
+      if (count > 100) return khat
     }
     sign * guess * sigmaX * sigmaY
   }

@@ -59,10 +59,6 @@ case class Preprocess(vanVleck: Boolean = false,
                       meta: graft.model.MetaSource =
                         graft.model.SynthDims,
                       rfiStrategy: RfiStrategy = RfiStrategy(),
-                      // C5 iteration-cap policy: true (default) =
-                      // reference bit-parity (abandon to khat at the
-                      // cap); false = engine-stable sub-nano acceptance
-                      vvReferenceCapFallback: Boolean = true,
                       // C6 solutions source: an MWAOCAL binary file
                       // (the reference's production input) instead of
                       // the synthetic calsol dimension
@@ -111,7 +107,7 @@ case class Preprocess(vanVleck: Boolean = false,
     def uvw = uvwTable(spark)
     val stages: Seq[(Boolean, DataFrame => DataFrame)] = Seq(
       (vanVleck, df => VanVleck(df, meta.flaggedAnts(spark),
-        sampleScale, vvReferenceCapFallback,
+        sampleScale,
         // broadcast σ when the CONTAINER bounds it under the
         // threshold (VanVleck.sigmaFitsBroadcast — Catalyst's own
         // estimate never fires here)

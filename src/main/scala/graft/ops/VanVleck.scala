@@ -43,15 +43,11 @@ object VanVleck {
   private def vvAuto(s: Column): Column =
     graft.functions.VanVleckExprs.auto(s)
 
-  /** Cross-kernel expression with the iteration-cap policy threaded
-    * through: refCap = true (the DEFAULT, which the oracle gates pin)
-    * reproduces the reference bit-for-bit — abandon to khat at the
-    * 100-iteration cap (van_vleck.rs:723-730); false opts into the
-    * engine-stable acceptance of a sub-nano residual at the cap.
+  /** Cross-kernel expression: the reference's rule bit for bit,
+    * abandoning to khat at the 100-iteration cap (van_vleck.rs:723-730).
     */
-  private def vvCrossFn(refCap: Boolean)
-      : (Column, Column, Column) => Column =
-    graft.functions.VanVleckExprs.cross(refCap)
+  private def vvCross(k: Column, sx: Column, sy: Column): Column =
+    graft.functions.VanVleckExprs.cross(k, sx, sy)
 
   /** Derive the per-(t, ant, chan) σ table from auto rows.
     * `sighatExpr` maps an auto component column to σ̂ (for real data:
@@ -117,9 +113,7 @@ object VanVleck {
     */
   def apply(vis: DataFrame, flaggedAnts: Seq[Long],
             sampleScale: Double,
-            referenceCapFallback: Boolean = true,
             broadcastSigma: Boolean = false): DataFrame = {
-    val vvCross = vvCrossFn(referenceCapFallback)
     val sigma = sigmaTable(vis, flaggedAnts, sampleScale)
     val hint: DataFrame => DataFrame =
       if (broadcastSigma) broadcast else identity
@@ -212,6 +206,6 @@ object VanVleck {
         (lit(1.0) + ((col("ant2") * 23 + col("chan") * 11) % 64)
           .cast("double") / 128.0).as("sy"))
       .withColumn("kappa_u",
-        floor(vvCrossFn(refCap = true)(col("khat"), col("sx"),
+        floor(vvCross(col("khat"), col("sx"),
           col("sy")) * 1.0e6 + 0.5))
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.llm.Similarity
 import graft.llm.Similarity.IvfPqModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -43,18 +43,10 @@ object AnnProbe {
     val rep = sys.env.getOrElse("SPARK_GRAFT_ANN_REP", "512").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
       .max(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // AQE off so executedPlan.collect reaches the scan nodes and
-      // their metrics directly (layout comparison, not AQE study)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(2000000).selectExpr("sum(id * 2)").collect()
+    val spark = graft.Bench.sessionFor(cpus)
+    // AQE off so executedPlan.collect reaches the scan nodes and
+    // their metrics directly (layout comparison, not AQE study)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = emb.count()

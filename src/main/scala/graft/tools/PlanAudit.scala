@@ -2,22 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for representative queries and
   * grep the properties SCALE.md claims (pushdown, broadcast joins,
   * exchange counts, codegen spans) into PLANS.md.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE stays ON in production (Bench); disabled here only so the
-      // static executedPlan prints its WholeStageCodegen annotations
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.sessionFor("8")
+    // AQE stays ON in production (Bench); disabled here only so the
+    // static executedPlan prints its WholeStageCodegen annotations
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
 
@@ -73,73 +67,30 @@ object PlanAudit {
       }
     }
 
-    /** Listener tally over ALL jobs a gate runs — the in-plan audit
-      * above sees only the FINAL frame's tree, which is blind to
-      * checkpoint-severed iteration (connectedComponents eagerly
-      * localCheckpoints every round, so d6/d15 reported "0 data
-      * shuffles" while the real per-round join+aggregate exchanges —
-      * the actual cost — ran behind the checkpoints). Every stage
-      * that writes shuffle output is one executed exchange map-stage,
-      * loops and driver-side isEmpty probes included.
+    /** Build + run a gate at `dirX` inside one [[Profile]] window, so
+      * the tally covers the WHOLE lifecycle: construction runs eager
+      * checkpoints/collects, execution runs the final plan. The
+      * in-plan audit above sees only the FINAL frame's tree, which is
+      * blind to checkpoint-severed iteration (connectedComponents
+      * eagerly localCheckpoints every round, so d6/d15 reported "0
+      * data shuffles" while the real per-round join+aggregate
+      * exchanges ran behind the checkpoints). Every stage that writes
+      * shuffle output is one executed exchange map-stage, loops and
+      * driver-side isEmpty probes included; the window's closing
+      * drain sentinel is one more (a partial count, one row per
+      * partition), as this tally has always counted it. Returns
+      * (per-exchange records of the final plan, executed shuffle
+      * stages, shuffled records, jobs).
       */
-    class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-      @volatile var stages = 0
-      @volatile var records = 0L
-      @volatile var jobs = 0
-      // sentinel-drain machinery: the listener bus is one ordered
-      // queue, so observing the end of a marked no-shuffle job proves
-      // every EARLIER event has been delivered — deterministic, unlike
-      // the fixed 500 ms sleep this replaces (an async bus draining
-      // slower under load silently undercounted executed stages)
-      @volatile var drainSeen = false
-      private val drainJobs =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      def reset(): Unit = { stages = 0; records = 0L; jobs = 0 }
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        if (desc == "__planaudit_drain__") drainJobs.add(j.jobId)
-        else jobs += 1
-      }
-      override def onJobEnd(
-          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (drainJobs.remove(j.jobId)) drainSeen = true
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null && m.shuffleWriteMetrics.recordsWritten > 0) {
-          stages += 1
-          records += m.shuffleWriteMetrics.recordsWritten
-        }
-      }
-    }
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-
-    /** Build + run a gate at `dirX` with the tally wrapped around the
-      * WHOLE lifecycle (construction runs eager checkpoints/collects;
-      * execution runs the final plan) — returns (per-exchange records
-      * of the final plan, executed shuffle stages, shuffled records,
-      * jobs).
-      */
+    val profile = Profile.attach(spark)
     def measureAt(name: String, dirX: String)
         : (Seq[Long], Int, Long, Int) = {
-      tally.reset()
-      val dfX = graft.SparkEntry.queries(name)(spark, dirX)
-      val recs = exchangeRecords(dfX)
-      // deterministic bus drain: run a marked no-shuffle sentinel job
-      // (the tally skips it) and wait until ITS end event is observed —
-      // the ordered bus then guarantees every earlier event landed
-      tally.drainSeen = false
-      spark.sparkContext.setJobDescription("__planaudit_drain__")
-      spark.range(1).count()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 15L * 1000000000L
-      while (!tally.drainSeen && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      (recs, tally.stages, tally.records, tally.jobs)
+      val (recs, w) = profile.record(spark) {
+        exchangeRecords(graft.SparkEntry.queries(name)(spark, dirX))
+      }
+      val shuffled = w.stages.filter(_.shuffleWriteRecords > 0)
+      (recs, shuffled.size, shuffled.map(_.shuffleWriteRecords).sum,
+        w.jobs.size)
     }
 
     val sb = new StringBuilder

@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import graft.model.Obs
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** K4: the reference's end-of-run rate report
@@ -12,12 +8,12 @@ import org.apache.spark.sql.SparkSession
   *
   * The reference times its read/write stages and prints estimated
   * selected/averaged data volumes with MiB/s rates. On Spark the
-  * equivalent signal is the task-metrics stream: a [[SparkListener]]
-  * accumulates bytes/records read and written across all tasks (the
-  * distributed analogue of the reference's single-process counters),
-  * and the estimate formulas reproduce the reference's
-  * `ts·ch·bl·(sizeof(Jones<f32>) + sizeof(f32) + sizeof(bool))`
-  * accounting from the observation dims.
+  * equivalent signal is the task-metrics stream: the session's
+  * [[Profile]] listener totals bytes/records read and written across
+  * all stages (the distributed analogue of the reference's
+  * single-process counters), and the estimate formulas reproduce the
+  * reference's `ts·ch·bl·(sizeof(Jones<f32>) + sizeof(f32) +
+  * sizeof(bool))` accounting from the observation dims.
   */
 object RateReport {
 
@@ -27,49 +23,26 @@ object RateReport {
   val BytesPerCell: Long = 8L * 4 + 4 + 1
 
   /** Reference-style estimate of the selected-data volume. */
-  def estimatedSelectedBytes(nTimesteps: Long = Obs.NumTimesteps,
-                             nChans: Long = Obs.NumChans,
-                             nBaselines: Long =
-                               Obs.NumAnts.toLong * (Obs.NumAnts + 1) / 2)
-      : Long = nTimesteps * nChans * nBaselines * BytesPerCell
+  def estimatedSelectedBytes(nTimesteps: Long, nChans: Long,
+                             nBaselines: Long): Long =
+    nTimesteps * nChans * nBaselines * BytesPerCell
 
-  final class Listener extends SparkListener {
-    val bytesRead = new LongAdder
-    val recordsRead = new LongAdder
-    val bytesWritten = new LongAdder
-    val recordsWritten = new LongAdder
-    val taskTimeMs = new LongAdder
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        bytesRead.add(m.inputMetrics.bytesRead)
-        recordsRead.add(m.inputMetrics.recordsRead)
-        bytesWritten.add(m.outputMetrics.bytesWritten)
-        recordsWritten.add(m.outputMetrics.recordsWritten)
-        taskTimeMs.add(m.executorRunTime)
-      }
-    }
-  }
-
-  /** Attach a fresh metrics listener to the session. */
-  def attach(spark: SparkSession): Listener = {
-    val l = new Listener
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
+  /** The session's [[Profile]] listener, whose totals the report reads. */
+  def attach(spark: SparkSession): Profile.Listener = Profile.attach(spark)
 
   private def mib(bytes: Double): Double = bytes / (1 << 20)
 
-  /** Render the reference-shaped report for a measured wall time. */
-  def render(l: Listener, wallSecs: Double): String = {
+  /** Render the reference-shaped report for a measured wall time over
+    * an observation of `cells` visibility cells (ts x chan x bl).
+    */
+  def render(l: Profile.Listener, wallSecs: Double, cells: Long): String = {
     val readRate = if (wallSecs > 0) mib(l.bytesRead.sum.toDouble) /
       wallSecs else 0.0
     val writeRate = if (wallSecs > 0) mib(l.bytesWritten.sum.toDouble) /
       wallSecs else 0.0
     f"""data read    = ${mib(l.bytesRead.sum.toDouble)}%10.2f MiB (${l.recordsRead.sum}%d records) @ $readRate%8.3f MiB/s
        |data written = ${mib(l.bytesWritten.sum.toDouble)}%10.2f MiB (${l.recordsWritten.sum}%d records) @ $writeRate%8.3f MiB/s
-       |task time    = ${l.taskTimeMs.sum / 1000.0}%10.2f s across tasks (wall $wallSecs%.2f s)
-       |est selected = ${mib(estimatedSelectedBytes().toDouble)}%10.2f MiB (ts x chan x bl x ${BytesPerCell}B)""".stripMargin
+       |task time    = ${l.runTimeMs.sum / 1000.0}%10.2f s across tasks (wall $wallSecs%.2f s)
+       |est selected = ${mib(cells.toDouble * BytesPerCell)}%10.2f MiB (ts x chan x bl x ${BytesPerCell}B)""".stripMargin
   }
 }

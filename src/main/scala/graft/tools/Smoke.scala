@@ -1,21 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 gate: SparkEntry.entry must
   * return rows > 0 on sf0.001. Also prints the physical plan so plan
   * regressions (lost broadcast, unexpected shuffle) are visible.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.sessionFor("8")
     val df = graft.SparkEntry.entry(spark)
     if (args.contains("--explain")) df.explain("formatted")
     val n = df.count()

@@ -30,7 +30,8 @@ class RateReportSpec extends AnyFunSuite {
     assert(n > 0)
     assert(l.bytesRead.sum > 0, "parquet scan must report bytes read")
     assert(l.recordsRead.sum >= n)
-    val report = RateReport.render(l, wall)
+    // each scanned row stands in for one visibility cell
+    val report = RateReport.render(l, wall, cells = n)
     assert(report.contains("MiB/s"))
     assert(report.contains("data read"))
     assert(report.contains("est selected"))

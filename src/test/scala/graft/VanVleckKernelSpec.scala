@@ -59,8 +59,7 @@ class VanVleckKernelSpec extends AnyFunSuite {
     * [[corrcorrectSimp]] — this is the verbatim pre-r22 loop.
     */
   private def referenceCrossInt(khat: Double, sigmaX: Double,
-                                sigmaY: Double,
-                                referenceCapFallback: Boolean): Double = {
+                                sigmaY: Double): Double = {
     if (sigmaX <= 0.0 || sigmaY <= 0.0) return khat
     val sign = math.signum(khat)
     val k = math.abs(khat)
@@ -77,10 +76,7 @@ class VanVleckKernelSpec extends AnyFunSuite {
       guess = step
       delta = corrcorrectSimp(guess, x, y) - k
       count += 1
-      if (count > 100)
-        return if (!referenceCapFallback && math.abs(delta) <= 1e-9)
-          sign * guess * sigmaX * sigmaY
-        else khat
+      if (count > 100) return khat
     }
     sign * guess * sigmaX * sigmaY
   }
@@ -90,22 +86,21 @@ class VanVleckKernelSpec extends AnyFunSuite {
     // the fixture-realistic surface: khat on the synth's 1997-value
     // dyadic grid (±7.5 range / scale 2), sigmas in the auto-kernel
     // output range, plus guard/edge values (0, ±ties, rho→1 knife
-    // edges via tiny sigmas, negatives, cap-policy both ways)
+    // edges via tiny sigmas, negatives)
     val khats =
       (-998 to 998 by 7).map(n => (n.toDouble / 128.0) / 2.0) ++
         Seq(0.0, -0.0, 1e-9, -1e-9, 3.74, -3.74, 0.999, 1.0001)
     val sigmas = Seq(0.6, 0.9, 1.0, 1.1, 1.37, 1.8, 2.4, 0.0, -1.0)
-    for (k <- khats; sx <- sigmas; sy <- sigmas;
-         cap <- Seq(true, false)) {
-      val fast = vanVleckCrossInt(k, sx, sy, cap)
-      val ref = referenceCrossInt(k, sx, sy, cap)
+    for (k <- khats; sx <- sigmas; sy <- sigmas) {
+      val fast = vanVleckCrossInt(k, sx, sy)
+      val ref = referenceCrossInt(k, sx, sy)
       assert(bits(fast) == bits(ref),
-        s"khat=$k sx=$sx sy=$sy cap=$cap: fast=$fast ref=$ref")
+        s"khat=$k sx=$sx sy=$sy: fast=$fast ref=$ref")
     }
   }
 
   test("cross memo returns the kernel's exact bits, hit or miss") {
-    val memo = new graft.functions.VanVleckCrossMemo(true)
+    val memo = new graft.functions.VanVleckCrossMemo
     val bits = java.lang.Double.doubleToLongBits _
     val triples = for {
       n <- -40 to 40; s <- Seq(0.9, 1.1, 1.6)
